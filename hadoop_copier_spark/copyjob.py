@@ -8,14 +8,17 @@ re-expresses that capability Spark-first:
 - driver-side recursive listing (R4; the reference's Stack-DFS at
   m/service/HdfsCopyService.java:67-109 becomes a flat file work-list —
   the driver only ever holds metadata, never data),
-- a work-list DataFrame repartitioned across the cluster (R11; replaces
-  the fixed 10-thread pool of m/config/AsyncConfig.java:16-25),
+- the work list striped round-robin over ``parallelism`` partitions of a
+  single Spark stage (R11; replaces the fixed 10-thread pool of
+  m/config/AsyncConfig.java:16-25),
 - mapPartitions byte copy with a token-bucket throttle (R7 parity with
-  m/service/ThrottledInputStream.java:47-67) and MD5 fused into the read
-  loop (R8; single-pass, unlike the reference's 2x local re-read at
-  m/service/HdfsCopyService.java:153-163 — we hash the destination stream
-  while writing and re-verify by re-reading only when paranoid_verify=True),
-- per-row results instead of cross-thread mutable state (R13),
+  m/service/ThrottledInputStream.java:47-67) and the source MD5 fused into
+  the read loop (R8; the reference re-reads the local source at
+  m/service/HdfsCopyService.java:153-163 — with checksums on we re-read
+  only the destination, to verify what actually landed),
+- per-file and per-item failure containment (R13): each partition returns
+  one partial rollup per item it touched and the driver merges them, so
+  no cross-thread mutable state and no per-file rows reach the driver,
 - exact status rollup semantics of m/service/CopyTaskService.java:116-122
   (failed==0 -> COMPLETED; completed==0 -> FAILED; else PARTIALLY_FAILED),
 - empty-directory item => checksum_verified=False, as in
@@ -36,7 +39,7 @@ byte copy, verification, and split-finalize all speak the same interface,
 so a remote cluster is a namespace-config change, not a rewrite.
 
 At 100 TB: listing parallelizes per top-level item; the work-list is
-repartitioned so each executor copies a disjoint file set; no data ever
+striped so each executor copies a disjoint file set; no data ever
 flows through the driver; skew (one giant file) is bounded by BYTE-RANGE
 SPLITTING: files larger than ``split_threshold_bytes`` are planned as
 multiple (offset, length) chunk rows, so a 1 TB file becomes ~8192 tasks of
@@ -56,16 +59,14 @@ would multiply the effective rate by the chunk count.
 from __future__ import annotations
 
 import hashlib
-import os
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Optional
+from typing import NamedTuple, Optional
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
-from .fs import fs_for, parent, qualify
+from .fs import fs_for, qualify
 
 BUFFER_SIZE = 64 * 1024  # matches the reference's copy buffer (R6)
 
@@ -75,19 +76,6 @@ BUFFER_SIZE = 64 * 1024  # matches the reference's copy buffer (R6)
 # tasks elsewhere in the engine.
 DEFAULT_SPLIT_THRESHOLD = 256 * 1024 * 1024
 DEFAULT_SPLIT_CHUNK = 128 * 1024 * 1024
-
-RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("item_idx", T.IntegerType()),
-        T.StructField("src_file", T.StringType()),
-        T.StructField("dst_file", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("bytes_copied", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("error_message", T.StringType()),
-        T.StructField("checksum_verified", T.BooleanType()),
-    ]
-)
 
 
 class ValidationError(ValueError):
@@ -271,34 +259,78 @@ def _copy_one_range(src: str, dst: str, offset: int, length: int, checksum: bool
         return total, True
 
 
+class _Rollup(NamedTuple):
+    """Copy outcome of one item over some of its files: one file, one
+    partition's share, or (merged on the driver) all of them."""
+
+    n_failed: int
+    nbytes: int
+    dur: int  # slowest file, ms
+    all_verified: bool
+    first_err: Optional[tuple]  # min (src_file, message) over failed files
+    failed_dsts: frozenset  # split destinations with a failed chunk
+
+    def merge(self, other: "_Rollup") -> "_Rollup":
+        errs = [e for e in (self.first_err, other.first_err) if e is not None]
+        return _Rollup(
+            self.n_failed + other.n_failed,
+            self.nbytes + other.nbytes,
+            max(self.dur, other.dur),
+            self.all_verified and other.all_verified,
+            min(errs) if errs else None,
+            self.failed_dsts | other.failed_dsts,
+        )
+
+
+def _merge_into(acc: dict, rollups) -> dict:
+    """Fold ``(item_idx, _Rollup)`` pairs into ``acc`` per item."""
+    for idx, r in rollups:
+        acc[idx] = acc[idx].merge(r) if idx in acc else r
+    return acc
+
+
+def _stripe(sc, rows: list, parallelism: int):
+    """RDD of ``min(parallelism, len(rows))`` partitions where partition p
+    holds the single list ``rows[p::n]`` — true round-robin, so consecutive
+    chunks of one split file land on different partitions (parallelize on
+    the flat list would slice contiguously). Explicit slicing also avoids
+    defaultParallelism-wide Python stages for a handful of rows."""
+    n = min(parallelism, max(1, len(rows)))
+    return sc.parallelize([rows[p::n] for p in range(n)], n)
+
+
 def _make_partition_copier(bandwidth_mb: Optional[int], checksum: bool):
     max_bps = bandwidth_mb * 1024 * 1024 if bandwidth_mb else None
 
-    def copy_partition(rows):
-        for row in rows:
-            t0 = time.monotonic()
-            try:
-                if not fs_for(row.src_file).exists(row.src_file):
-                    raise IOError(f"Source path does not exist: {row.src_file}")
-                if row.length >= 0:  # byte-range chunk of a split file
-                    nbytes, verified = _copy_one_range(
-                        row.src_file, row.write_path, row.offset, row.length, checksum
-                    )
-                else:  # whole file, single stream (reference-parity path)
-                    nbytes, verified = _copy_one_file(
-                        row.src_file, row.dst_file, max_bps, checksum
-                    )
-                yield (
-                    row.item_idx, row.src_file, row.dst_file, "COMPLETED",
-                    nbytes, int((time.monotonic() - t0) * 1000), None, verified,
-                )
-            except Exception as e:  # per-file containment (R13)
-                yield (
-                    row.item_idx, row.src_file, row.dst_file, "FAILED",
-                    0, int((time.monotonic() - t0) * 1000), str(e), False,
-                )
+    def copy_one(src, dst, offset, length, write_path):
+        t0 = time.monotonic()
+        try:
+            if not fs_for(src).exists(src):
+                raise IOError(f"Source path does not exist: {src}")
+            if length >= 0:  # byte-range chunk of a split file
+                nbytes, verified = _copy_one_range(src, write_path, offset, length, checksum)
+            else:  # whole file, single stream (reference-parity path)
+                nbytes, verified = _copy_one_file(src, dst, max_bps, checksum)
+            return _Rollup(0, nbytes, int((time.monotonic() - t0) * 1000), verified, None, frozenset())
+        except Exception as e:  # per-file containment (R13)
+            return _Rollup(
+                1, 0, int((time.monotonic() - t0) * 1000), False, (src, str(e)),
+                frozenset([dst]) if length >= 0 else frozenset(),
+            )
+
+    def copy_partition(stripes):
+        """Copy this partition's stripe; return one partial per item."""
+        rolls = ((idx, copy_one(*spec)) for stripe in stripes for idx, *spec in stripe)
+        return list(_merge_into({}, rolls).items())
 
     return copy_partition
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        fs_for(path).remove(path)
+    except OSError:
+        pass
 
 
 def _walk_listing_stripe(stripe):
@@ -450,10 +482,8 @@ class CopyJobEngine:
         out = [(n, sfs.size(sfs.join(src, n))) for n in top_files]
         if top_dirs:
             roots = [(n, sfs.join(src, n)) for n in top_dirs]
-            n_parts = min(self.parallelism, len(roots))
-            stripes = [roots[p::n_parts] for p in range(n_parts)]
             out += (
-                self.spark.sparkContext.parallelize(stripes, n_parts)
+                _stripe(self.spark.sparkContext, roots, self.parallelism)
                 .flatMap(_walk_listing_stripe)
                 .collect()
             )
@@ -483,7 +513,7 @@ class CopyJobEngine:
         # (HdfsFileSystemFactory parity)
         ns_conf = self._namespace_conf.get(request.namespace)
         work: list[tuple] = []
-        item_meta = []
+        item_meta: list[tuple] = []  # (planning error or None, empty_dir)
         split_tmp: dict[str, str] = {}  # final dst -> temp chunk target
         split_item: dict[str, int] = {}  # final dst -> owning item idx
         # Throttled items are never split — the reference throttle is a cap
@@ -498,11 +528,13 @@ class CopyJobEngine:
             # destinations to the remote store. Remote destinations remain
             # expressible, but only as explicit scheme-qualified URIs.
             dst = item.local_path
-            sfs, dfs = fs_for(src), fs_for(dst)
-            pairs: list[tuple] = []
-            missing = not sfs.exists(src)
+            rows: list[tuple] = []
+            tmps: dict[str, str] = {}
             empty_dir = False
-            if not missing:
+            try:
+                sfs, dfs = fs_for(src), fs_for(dst)
+                if not sfs.exists(src):
+                    raise IOError(f"Source path does not exist: {src}")
                 if sfs.isdir(src):
                     # (rel, size) in one enumeration — sizes ride the
                     # listing instead of one size() RPC per file, and big
@@ -516,148 +548,82 @@ class CopyJobEngine:
                     dfs.mkdirs(dst)
                 else:
                     pairs = [(src, dst, sfs.size(src))]
-            n_files = len(pairs)
-            for s, d, size in pairs:
-                if may_split and size > self.split_threshold_bytes and dfs.supports_range_write:
-                    # Plan (offset, length) chunk rows against a TEMP
-                    # destination, pre-sized (driver-side metadata op) so
-                    # concurrent chunk writes land in a file with no stale
-                    # bytes past the new EOF. The temp is renamed over the
-                    # real destination only when EVERY chunk succeeds —
-                    # a failed split item must not leave a full-size file
-                    # of garbage ranges (whole-file-path / reference
-                    # failure semantics: at most a partial file).
-                    # Append-only destinations (supports_range_write=False)
-                    # keep the single-stream path.
-                    tmp = d + ".__hcs_tmp__"
-                    dfs.truncate_file(tmp, size)
-                    split_tmp[d] = tmp
-                    split_item[d] = idx
-                    for off in range(0, size, self.split_chunk_bytes):
-                        work.append(
-                            (idx, s, d, off, min(self.split_chunk_bytes, size - off), tmp)
-                        )
-                else:
-                    work.append((idx, s, d, 0, -1, d))  # whole-file stream path
-            item_meta.append(
-                {"missing": missing, "empty_dir": empty_dir, "n_files": n_files, "src": src}
-            )
+                for s, d, size in pairs:
+                    if may_split and size > self.split_threshold_bytes and dfs.supports_range_write:
+                        # Plan (offset, length) chunk rows against a TEMP
+                        # destination, pre-sized (driver-side metadata op)
+                        # so concurrent chunk writes land in a file with no
+                        # stale bytes past the new EOF. The temp is renamed
+                        # over the real destination only when EVERY chunk
+                        # succeeds — a failed split item must not leave a
+                        # full-size file of garbage ranges (whole-file-path
+                        # / reference failure semantics: at most a partial
+                        # file). Append-only destinations
+                        # (supports_range_write=False) keep the
+                        # single-stream path.
+                        tmp = tmps[d] = d + ".__hcs_tmp__"
+                        dfs.truncate_file(tmp, size)
+                        for off in range(0, size, self.split_chunk_bytes):
+                            rows.append(
+                                (idx, s, d, off, min(self.split_chunk_bytes, size - off), tmp)
+                            )
+                    else:
+                        rows.append((idx, s, d, 0, -1, d))  # whole-file stream path
+            except Exception as e:
+                # per-item containment (R13, CopyTaskService.java:82-106):
+                # this item fails, the rest of the request still copies
+                for tmp in tmps.values():
+                    _remove_quietly(tmp)
+                item_meta.append((str(e), False))
+                continue
+            work += rows
+            split_tmp.update(tmps)
+            split_item.update(dict.fromkeys(tmps, idx))
+            item_meta.append((None, empty_dir))
 
-        # Execute + aggregate IN SPARK. The r5 design collected every
-        # per-file/per-chunk result row to the driver — O(files+chunks)
-        # driver memory, which a 10^8-file tree would break (VERDICT r5
-        # "What's wrong" #3). Now only bounded rollups cross to the driver:
-        # one row per item (status counts, byte sum, verified AND, first
-        # error) + one row per SPLIT destination (chunk completion for the
-        # rename barrier) — O(items + split_files), metadata however big
-        # the tree is.
-        item_rollup: dict[int, dict] = {}
-        split_ok: dict[str, bool] = {}
+        # Execute as ONE Spark stage: each partition copies its stripe and
+        # returns one partial rollup per item it touched (file counts, byte
+        # sum, slowest file, verified AND, first error, split destinations
+        # with a failed chunk); the driver merges them. Driver memory is
+        # O(partitions x items + failed split destinations) of metadata —
+        # no per-file or per-chunk row ever reaches it, however big the
+        # tree, and there is no shuffle or cached intermediate.
+        item_rollup: dict[int, _Rollup] = {}
         if work:
-            from pyspark import StorageLevel
-            from pyspark.sql import functions as F
-
-            # Plan the work list with EXACTLY the slice count we want to run
-            # at: createDataFrame(local_list) slices to defaultParallelism
-            # (32 here) regardless of size, and a repartition() on top would
-            # mean a 32-task Python stage + a shuffle just to fan a handful
-            # of rows into `parallelism` partitions — measured 4-10 s of
-            # Python-worker pool startup on a cold session (the r3 bench
-            # "xp_copyjob 4x regression"). parallelize(groups, n) gives n
-            # partitions up front, one stripe each: partition p holds
-            # work[p::n] — true round-robin (ADVICE r5: parallelize on the
-            # flat list slices CONTIGUOUSLY, which would gang consecutive
-            # chunks of one split file into the same partition).
-            n_parts = min(self.parallelism, max(1, len(work)))
-            groups = [work[p::n_parts] for p in range(n_parts)]
-            wrdd = self.spark.sparkContext.parallelize(groups, n_parts).flatMap(lambda g: g)
-            wdf = self.spark.createDataFrame(
-                wrdd,
-                schema="item_idx int, src_file string, dst_file string, "
-                "offset long, length long, write_path string",
-            )
             copier = _make_partition_copier(request.bandwidth, self.checksum_enabled)
-            rdf = wdf.rdd.mapPartitions(copier).toDF(RESULT_SCHEMA)
-            first_err = F.min(
-                F.when(
-                    F.col("status") == "FAILED",
-                    F.struct("src_file", "error_message"),
-                )
-            ).alias("first_err")
-            per_dst = (
-                rdf.groupBy("item_idx", "dst_file")
-                .agg(
-                    F.sum(F.when(F.col("status") == "FAILED", 1).otherwise(0)).alias("n_failed"),
-                    F.sum("bytes_copied").alias("nbytes"),
-                    F.max("duration_ms").alias("dur"),
-                    F.min(F.col("checksum_verified").cast("int")).alias("all_verified"),
-                    first_err,
-                )
-            )
-            # per-dst rollup stays IN SPARK (O(files) rows of metadata).
-            # With split files in play there are two driver actions below —
-            # persist so the copy stage beneath them runs exactly once; the
-            # common no-split path is a single action and skips the persist.
-            if split_tmp:
-                per_dst.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                if split_tmp:
-                    for r in (
-                        per_dst.filter(F.col("dst_file").isin(list(split_tmp)))
-                        .select("dst_file", "n_failed")
-                        .collect()
-                    ):  # O(split destinations)
-                        split_ok[r["dst_file"]] = r["n_failed"] == 0
-                for r in (
-                    per_dst.groupBy("item_idx")
-                    .agg(
-                        F.sum("n_failed").alias("n_failed"),
-                        F.sum("nbytes").alias("nbytes"),
-                        F.max("dur").alias("dur"),
-                        F.min("all_verified").alias("all_verified"),
-                        F.min("first_err").alias("first_err"),
-                    )
-                    .collect()
-                ):  # O(items)
-                    item_rollup[r["item_idx"]] = r.asDict(recursive=True)
-            finally:
-                if split_tmp:
-                    per_dst.unpersist()
+            stripes = _stripe(self.spark.sparkContext, work, self.parallelism)
+            _merge_into(item_rollup, stripes.mapPartitions(copier).collect())
+        failed_dsts = frozenset().union(*(r.failed_dsts for r in item_rollup.values()))
 
         # Finalize split files: rename temp over destination only when every
         # chunk landed; otherwise drop the temp (failure leaves no full-size
         # garbage file — ADVICE round 1).
         rename_errors: dict[int, list] = {}  # item idx -> sorted messages
         for dst, tmp in split_tmp.items():
-            tfs = fs_for(tmp)
-            if split_ok.get(dst):
+            if dst not in failed_dsts:
                 try:
-                    tfs.replace(tmp, dst)
+                    fs_for(tmp).replace(tmp, dst)
                     continue
                 except OSError as e:
                     rename_errors.setdefault(split_item[dst], []).append(
                         f"Finalize rename failed for {dst}: {e}"
                     )
-            try:
-                tfs.remove(tmp)
-            except OSError:
-                pass
+            _remove_quietly(tmp)
 
         for idx, item in enumerate(request.items):
-            meta = item_meta[idx]
+            plan_err, empty_dir = item_meta[idx]
             roll = item_rollup.get(idx)
-            if meta["missing"]:
-                status, err = "FAILED", f"Source path does not exist: {meta['src']}"
-                nbytes, dur, verified = 0, 0, False
-            elif meta["empty_dir"]:
+            if plan_err is not None:
+                status, err, nbytes, dur, verified = "FAILED", plan_err, 0, 0, False
+            elif empty_dir:
                 # empty directory: COMPLETED, 0 bytes, checksum false (R16)
                 status, err, nbytes, dur, verified = "COMPLETED", None, 0, 0, False
             else:
-                nbytes = roll["nbytes"]
-                dur = roll["dur"]
+                nbytes = roll.nbytes
+                dur = roll.dur
                 fail_msgs = []
-                if roll["n_failed"] > 0:
-                    fail_msgs.append(roll["first_err"]["error_message"])
+                if roll.n_failed > 0:
+                    fail_msgs.append(roll.first_err[1])
                 fail_msgs += sorted(rename_errors.get(idx, []))
                 if fail_msgs:
                     # one bad file fails the whole item, like the exception
@@ -665,7 +631,7 @@ class CopyJobEngine:
                     status, err, verified = "FAILED", fail_msgs[0], False
                 else:
                     status, err = "COMPLETED", None
-                    verified = bool(roll["all_verified"])
+                    verified = roll.all_verified
             task.items.append(
                 {
                     "hdfsPath": item.hdfs_path,

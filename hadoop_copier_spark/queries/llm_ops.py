@@ -567,9 +567,15 @@ def xp_training_pipeline(spark, sf_dir):
     reps = clusters.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
     curated = exact.join(reps, "doc_id")
 
-    # 5: stratified sample (seeded => deterministic for a fixed layout)
+    # 5: stratified sample keyed on each row's own doc_id hash, so the kept
+    # rows never depend on partition layout (sampleBy's per-partition RNG
+    # does); languages without a fraction are dropped, as in sampleBy
     fractions = {"en": 0.8, "de": 0.8, "es": 0.5, "fr": 0.5}
-    sampled = curated.sampleBy("lang", fractions, seed=7)
+    rate = F.coalesce(
+        *[F.when(F.col("lang") == k, F.lit(v)) for k, v in fractions.items()], F.lit(0.0)
+    )
+    bucket = F.pmod(F.xxhash64("doc_id", F.lit(7)), F.lit(1 << 20))
+    sampled = curated.filter(bucket < rate * (1 << 20))
 
     # 6: per-language corpus stats
     return (

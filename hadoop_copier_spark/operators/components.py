@@ -80,7 +80,7 @@ def connected_components(
         lab = lab.union(nodes.select(F.col(nodes.columns[0]).alias("u")))
     # one distinct vertex frame (over the CHECKPOINTED edges — cheap)
     # feeds both the self-edge rows and the initial label state; lazy,
-    # materialized by the initial probe job below
+    # materialized by the first job that reads the labels below
     verts = lab.distinct().localCheckpoint(eager=False)
     # r19 (guide §2.4): fold the per-round left-join fixup into the edge
     # set — a (u, u) self-edge per vertex makes the neighbor min INCLUDE
@@ -92,9 +92,7 @@ def connected_components(
     sym_all = sym.unionByName(
         verts.select("u", F.col("u").alias("v"))
     ).localCheckpoint(eager=False)
-    labels = verts.select(
-        F.col("u").alias("node"), F.col("u").alias("comp")
-    ).localCheckpoint(eager=False)
+    labels = verts.select(F.col("u").alias("node"), F.col("u").alias("comp"))
     # ADVICE r18 (medium): the SUM(comp) convergence probe is only exact
     # for integral ids — casting a string doc id to decimal yields NULL,
     # every round's sum is NULL, and None == None would end the loop
@@ -108,6 +106,8 @@ def connected_components(
         labels.schema["comp"].dataType,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
     )
+    # with no rounds, no later job may materialize labels before `sym` is released
+    labels = labels.localCheckpoint(eager=max_iter <= 0)
     prev_sum = (
         labels.agg(
             F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")

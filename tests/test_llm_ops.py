@@ -362,6 +362,27 @@ def test_connected_components_string_ids(spark):
     }
 
 
+def test_connected_components_zero_rounds_string_ids_outlive_release(spark):
+    """String ids, stats=None and max_iter=0 run no probe and no round, so
+    no job reads the labels before the operator releases the edge
+    checkpoint they derive from. The returned frame must still answer an
+    action run after other jobs (each vertex labels itself). AQE is off
+    in this session only: with it on, building the lazy checkpoint
+    already runs its shuffle stages, which hides a missing block."""
+    from hadoop_copier_spark.operators.components import connected_components
+
+    spark = spark.newSession()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    edges = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("e", "d")], "src string, dst string"
+    )
+    labels = connected_components(edges, max_iter=0)
+    for _ in range(3):
+        spark.range(2000).selectExpr("id % 7 AS k").groupBy("k").count().collect()
+    got = {r["node"]: r["comp"] for r in labels.collect()}
+    assert got == {v: v for v in "abcde"}
+
+
 def test_dedup_clusters_match_union_find(spark, sf_oracle):
     """h_dedup_clusters vs a driver-side union-find over the same pair set
     (independent of both the Spark propagation and the SQL oracle)."""

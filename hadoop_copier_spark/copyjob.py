@@ -43,7 +43,11 @@ striped so each executor copies a disjoint file set; no data ever
 flows through the driver; skew (one giant file) is bounded by BYTE-RANGE
 SPLITTING: files larger than ``split_threshold_bytes`` are planned as
 multiple (offset, length) chunk rows, so a 1 TB file becomes ~8192 tasks of
-128 MiB instead of one 1 TB task. Chunk copies seek/write disjoint ranges
+128 MiB instead of one 1 TB task. ``split_chunk_bytes`` (128 MiB) is a cap:
+the planner balances a file's chunks over ``parallelism`` (size /
+parallelism, rounded up to whole copy buffers, never below the 16 MiB
+``MIN_SPLIT_CHUNK``), so a 272 MiB file on 4 partitions copies as 4 x 68 MiB
+rather than 128 + 128 + 16 MiB. Chunk copies seek/write disjoint ranges
 of the destination (safe on POSIX / object-store ranged PUT; on HDFS —
 append-only — the same plan writes chunk part-files and stitches them with
 FileSystem.concat, exactly the DistCp strategy). Verification of split
@@ -71,11 +75,15 @@ from .fs import fs_for, qualify
 BUFFER_SIZE = 64 * 1024  # matches the reference's copy buffer (R6)
 
 # Byte-range splitting defaults: split when a file exceeds the threshold,
-# into chunks of the target size. 128 MiB matches the usual HDFS block /
-# Spark partition target, so chunk tasks are the same granularity as scan
+# into chunks of at most the chunk size. 128 MiB matches the usual HDFS
+# block / Spark partition target, so chunk tasks are never coarser than scan
 # tasks elsewhere in the engine.
 DEFAULT_SPLIT_THRESHOLD = 256 * 1024 * 1024
 DEFAULT_SPLIT_CHUNK = 128 * 1024 * 1024
+# Floor for chunks balanced over the copy parallelism: above S3's 5 MiB
+# multipart minimum, and about 70 ms of MD5 per side, several times a
+# task's launch cost.
+MIN_SPLIT_CHUNK = 16 * 1024 * 1024
 
 
 class ValidationError(ValueError):
@@ -563,10 +571,14 @@ class CopyJobEngine:
                         # single-stream path.
                         tmp = tmps[d] = d + ".__hcs_tmp__"
                         dfs.truncate_file(tmp, size)
-                        for off in range(0, size, self.split_chunk_bytes):
-                            rows.append(
-                                (idx, s, d, off, min(self.split_chunk_bytes, size - off), tmp)
-                            )
+                        # Spread the file evenly over every copy partition,
+                        # in whole copy buffers, so its latency is about
+                        # size / parallelism of copying and hashing rather
+                        # than that of one split_chunk_bytes chunk.
+                        balanced = -(-size // (self.parallelism * BUFFER_SIZE)) * BUFFER_SIZE
+                        chunk = min(self.split_chunk_bytes, max(MIN_SPLIT_CHUNK, balanced))
+                        for off in range(0, size, chunk):
+                            rows.append((idx, s, d, off, min(chunk, size - off), tmp))
                     else:
                         rows.append((idx, s, d, 0, -1, d))  # whole-file stream path
             except Exception as e:

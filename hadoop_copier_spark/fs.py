@@ -80,22 +80,17 @@ class LocalFS:
     def size(self, p: str) -> int:
         return os.path.getsize(p)
 
-    def walk_files(self, root: str) -> list[str]:
-        """Relative paths of every file under ``root``, sorted."""
-        out = []
-        for r, _dirs, names in os.walk(root):
-            for name in names:
-                out.append(os.path.relpath(os.path.join(r, name), root))
-        return sorted(out)
-
     def walk_files_with_size(self, root: str) -> list[tuple]:
         """Sorted ``(relative_path, size)`` of every file under ``root`` —
-        one enumeration pass instead of a walk plus per-file size RPCs."""
+        one enumeration pass instead of a walk plus per-file size RPCs.
+        The relative prefix is computed once per directory, not per file
+        (``relpath`` dominated the listing of wide directories)."""
         out = []
         for r, _dirs, names in os.walk(root):
+            prefix = os.path.relpath(r, root)
+            prefix = "" if prefix == os.curdir else prefix + os.sep
             for name in names:
-                full = os.path.join(r, name)
-                out.append((os.path.relpath(full, root), os.path.getsize(full)))
+                out.append((prefix + name, os.path.getsize(os.path.join(r, name))))
         return sorted(out)
 
     def list_dir(self, p: str) -> list[tuple]:
@@ -196,21 +191,9 @@ class ArrowFS:
     def size(self, p: str) -> int:
         return self._info(p).size
 
-    def walk_files(self, root: str) -> list[str]:
-        import pyarrow.fs as pafs
-
-        fs, native = self._resolve(root)
-        sel = pafs.FileSelector(native, recursive=True)
-        out = [
-            posixpath.relpath(info.path, native)
-            for info in fs.get_file_info(sel)
-            if info.type == pafs.FileType.File
-        ]
-        return sorted(out)
-
     def walk_files_with_size(self, root: str) -> list[tuple]:
         """Sorted ``(relative_path, size)`` — FileInfo already carries the
-        size, so this is the same single listing RPC as walk_files."""
+        size, so one recursive listing RPC covers both."""
         import pyarrow.fs as pafs
 
         fs, native = self._resolve(root)

@@ -450,9 +450,24 @@ def test_fs_dispatch_qualify_parent():
 
 def test_arrowfs_walk_matches_localfs(tree):
     src, files = tree
-    local = fs_for(str(src)).walk_files(str(src))
-    arrow = fs_for("file://" + str(src)).walk_files("file://" + str(src))
-    assert local == arrow == sorted(files)
+    local = fs_for(str(src)).walk_files_with_size(str(src))
+    arrow = fs_for("file://" + str(src)).walk_files_with_size("file://" + str(src))
+    assert local == arrow == sorted((rel, len(data)) for rel, data in files.items())
+
+
+def test_localfs_walk_matches_per_file_relpath(tree):
+    """The per-directory relative prefix gives exactly the per-file
+    ``relpath`` listing, also for a root spelled with a trailing slash
+    (whose own files must not pick up a "./" prefix)."""
+    src, files = tree
+    root = str(src) + os.sep
+    reference = sorted(
+        (os.path.relpath(os.path.join(r, name), root), os.path.getsize(os.path.join(r, name)))
+        for r, _dirs, names in os.walk(root)
+        for name in names
+    )
+    assert LocalFS().walk_files_with_size(root) == reference
+    assert [rel for rel, _ in reference] == sorted(files)
 
 
 def test_copy_tree_via_file_uri_scheme(spark, tree, tmp_path):
@@ -587,16 +602,91 @@ def test_request_runs_as_one_job_and_one_stage(spark, tree, tmp_path):
             min(4, 10),
         ),
     }
-    sc = spark.sparkContext
     for name, (eng, item, n_tasks) in cases.items():
-        group = f"copy-shape-{name}-{os.getpid()}-{time.monotonic_ns()}"
-        sc.setJobGroup(group, name)
-        try:
-            rid = eng.submit(CopyRequest("local", [item]))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert eng.status(rid)["status"] == "COMPLETED", name
-        assert _group_shape(sc, group) == (1, 1, [n_tasks]), name
+        st, shape = _submit_shape(spark, eng, item)
+        assert st["status"] == "COMPLETED", name
+        assert shape == (1, 1, [n_tasks]), name
+
+
+def _submit_shape(spark, eng, item):
+    """Submit one item in a fresh job group; (status, _group_shape)."""
+    sc = spark.sparkContext
+    group = f"copy-shape-{os.getpid()}-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "copy-shape")
+    try:
+        rid = eng.submit(CopyRequest("local", [item]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return eng.status(rid), _group_shape(sc, group)
+
+
+def test_split_chunks_fill_every_partition(spark, tmp_path, monkeypatch):
+    """A split file is spread evenly over ``parallelism`` chunks instead of
+    ``split_chunk_bytes`` ones: 2 MiB + 7 B at parallelism 4 with 1 MiB
+    chunks runs as 4 tasks (3 x 576 KiB + tail), not 3 (1 + 1 MiB + 7 B)."""
+    from hadoop_copier_spark import copyjob
+
+    monkeypatch.setattr(copyjob, "MIN_SPLIT_CHUNK", 64 * 1024)
+    src = tmp_path / "s.bin"
+    data = os.urandom(2 * 1024 * 1024 + 7)
+    src.write_bytes(data)
+    dst = tmp_path / "d.bin"
+    eng = CopyJobEngine(
+        spark, parallelism=4, split_threshold_bytes=1024 * 1024, split_chunk_bytes=1024 * 1024
+    )
+    st, shape = _submit_shape(spark, eng, CopyItem(str(src), str(dst)))
+    assert st["status"] == "COMPLETED"
+    assert st["items"][0]["checksumVerified"] is True
+    assert st["items"][0]["bytesCopied"] == len(data)
+    assert dst.read_bytes() == data
+    assert shape == (1, 1, [4])
+
+
+KIB = 1024
+
+
+@pytest.mark.parametrize(
+    "parallelism, chunk_bytes, floor, lengths",
+    [
+        # parallelism 1: the split_chunk_bytes cap sets the granularity
+        (1, 1024 * KIB, 64 * KIB, [1024 * KIB, 1024 * KIB, 7]),
+        # a split_chunk_bytes below the floor still wins
+        (4, 32 * KIB, 64 * KIB, [32 * KIB] * 64 + [7]),
+        # balanced chunks are whole 64 KiB copy buffers: ceil(size / 3)
+        # rounds up to 704 KiB, the tail takes the rest
+        (3, 1024 * KIB, 64 * KIB, [704 * KIB, 704 * KIB, 640 * KIB + 7]),
+        # the floor binds when size / parallelism is below it
+        (64, 1024 * KIB, 128 * KIB, [128 * KIB] * 16 + [7]),
+    ],
+)
+def test_split_chunk_plan(spark, tmp_path, monkeypatch, parallelism, chunk_bytes, floor, lengths):
+    """Chunk lengths the planner hands to ``_stripe``:
+    min(split_chunk_bytes, max(MIN_SPLIT_CHUNK, size / parallelism rounded
+    up to 64 KiB)); every chunk copies and verifies."""
+    from hadoop_copier_spark import copyjob
+
+    monkeypatch.setattr(copyjob, "MIN_SPLIT_CHUNK", floor)
+    planned = []
+
+    def spy(sc, rows, n):
+        planned.extend(rows)
+        return _stripe(sc, rows, n)
+
+    monkeypatch.setattr(copyjob, "_stripe", spy)
+    src = tmp_path / "s.bin"
+    data = os.urandom(2 * 1024 * KIB + 7)
+    src.write_bytes(data)
+    dst = tmp_path / "d.bin"
+    eng = CopyJobEngine(
+        spark, parallelism=parallelism, split_threshold_bytes=1024 * KIB,
+        split_chunk_bytes=chunk_bytes,
+    )
+    rid = eng.submit(CopyRequest("local", [CopyItem(str(src), str(dst))]))
+    assert [row[4] for row in planned] == lengths
+    assert [row[3] for row in planned] == [sum(lengths[:i]) for i in range(len(lengths))]
+    st = eng.status(rid)
+    assert st["status"] == "COMPLETED" and st["items"][0]["checksumVerified"] is True
+    assert dst.read_bytes() == data
 
 
 def test_planning_error_fails_only_its_item(spark, tmp_path):
@@ -659,7 +749,7 @@ class TestFsLayerUnits:
         fs = fs_for("file://" + str(d))
         assert fs.exists("file://" + str(d))
         assert fs.isdir("file://" + str(d))
-        assert fs.walk_files("file://" + str(d)) == []
+        assert fs.walk_files_with_size("file://" + str(d)) == []
         assert not fs.exists("file://" + str(tmp_path / "ghost"))
 
     def test_arrowfs_create_read_replace_remove_roundtrip(self, tmp_path):

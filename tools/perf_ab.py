@@ -6,8 +6,12 @@ Each ref is exported (``git archive``) to a temporary directory, where the
 unchanged ``perfbench/run.py`` runs untraced for BENCHMARK.json's
 ``run_seconds``, once per side per pair, alternating which side goes first.
 Prints each run's metrics and ``window_cpu_steal``, then per metric each
-side's quartiles and the pairs HEAD won. Exits 1 if a run's correctness
-check failed (perfbench's stderr, which names the check, passes through).
+side's quartiles and the pairs HEAD won. The detail line's per-class medians
+(``op_p50_ms_by_type``: request class for copy_ingest, query for
+sql_analytics) get the same table as ``op_p50_ms[class]``, so a change that
+moves one class and leaves the others alone shows as such. Exits 1 if a
+run's correctness check failed (perfbench's stderr, which names the check,
+passes through).
 """
 
 import argparse
@@ -34,6 +38,7 @@ def run(tree: str, args, seconds: float) -> dict:
     out = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, text=True, check=True).stdout.splitlines()
     detail, result = json.loads(out[-2])["detail"], json.loads(out[-1])
     row = {name: m["value"] for name, m in result["metrics"].items()}
+    row |= {f"op_p50_ms[{cls}]": ms for cls, ms in detail["op_p50_ms_by_type"].items()}
     return row | {"window_cpu_steal": detail["window_cpu_steal"], "correct": result["correct"]}
 
 
@@ -64,7 +69,8 @@ def main(argv=None) -> int:
                 print(f"pair {i + 1} {side}: " + " ".join(f"{k}={v:.4g}" for k, v in runs[side][-1].items()), flush=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    for name, direction in better.items():
+    classes = sorted({k for side in runs.values() for r in side for k in r if k.startswith("op_p50_ms[")})
+    for name, direction in [*better.items(), *((c, "lower") for c in classes)]:
         b, h = ([r[name] for r in runs[side] if name in r] for side in ("base", "head"))
         if b and h:
             wins = sum((y < x) if direction == "lower" else (y > x) for x, y in zip(b, h))

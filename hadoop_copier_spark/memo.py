@@ -18,19 +18,11 @@ repeated invocations within one session skip redundant jobs:
   signal: a same-path rewrite produces new part-file names, the key
   changes, and the probe re-fires — no immutability assumption left.
 
-Why a registry: the bench's warm pass and gate retries (bench.py) must
-control whether a measurement includes this memoized work. ADVICE r16
-(medium): the r16 gate's warm retry re-ran offenders in a session where
-these caches were already hot, so a genuine regression in a cached
-stage would trip the first pass and then be silently cleared by a
-retry that measured strictly less work. Since round 18 (ADVICE r17)
-the bench tracks cache keys PER QUERY: snapshot_cache_keys() diffs
-around each first run record exactly which keys that query inserted,
-and evict_cache_keys() removes precisely those before its warm re-run
-and any gate retry — so every query's warm number re-pays exactly the
-memoized work its own first run paid (same work, minus whole-stage-
-codegen compile), including per-site ``tpch_probes`` entries the old
-one-fronter-per-cache-NAME protocol missed.
+Why a registry: a benchmark must know whether a measurement includes
+this memoized work. perfbench's ``memo.keys_built`` counter diffs
+snapshot_cache_keys() around each query to count the keys that query
+inserted, and its ``memo.hits`` counter uses consumed_caches() to count
+the cache-consuming queries that inserted none.
 """
 
 from __future__ import annotations
@@ -68,34 +60,9 @@ def clear_memoized_caches(only: tuple[str, ...] | None = None) -> dict[str, int]
 
 def snapshot_cache_keys() -> dict[str, set]:
     """Current key sets of every registered cache (cheap driver-side
-    copies). The bench diffs snapshots taken around a query's first run
-    to learn exactly which keys THAT query's first run inserted."""
+    copies). perfbench diffs snapshots taken around a query's run to
+    learn exactly which keys THAT run inserted."""
     return {name: set(cache) for name, cache in _caches().items()}
-
-
-def evict_cache_keys(evictions: dict[str, set]) -> dict[str, int]:
-    """Evict specific keys from specific caches; returns
-    {cache_name: n_actually_evicted}. ADVICE r17: the warm pass and
-    gate retries used to clear whole caches for the single query that
-    FRONTED each cache NAME — but ``tpch_probes`` holds one entry per
-    (session, sf_dir, probe site), each built by the FIRST query using
-    that site, so a warm re-run of a later site-builder measured
-    strictly less work than its first run. Per-KEY eviction makes every
-    query's warm re-run (and gate retry) re-pay exactly the memoized
-    work its own first run paid — no per-site hole, no over-clearing
-    of keys built by other queries."""
-    caches = _caches()
-    out: dict[str, int] = {}
-    for name, keys in evictions.items():
-        cache = caches[name]
-        n = 0
-        for k in keys:
-            if k in cache:
-                del cache[k]
-                n += 1
-        if n:
-            out[name] = n
-    return out
 
 
 def consumed_caches(fn: Callable) -> tuple[str, ...]:
@@ -104,9 +71,8 @@ def consumed_caches(fn: Callable) -> tuple[str, ...]:
     Resolution is by module: every ``queries.graph_ops`` query filters
     the shared edge frame; every ``queries.tpch_analogs`` query may hit
     a broadcast-probe site; ``xh_hard_negatives`` (queries.llm_ops) is
-    the sole hardneg-probe consumer. Used by bench.py to decide which
-    caches a gate retry must clear and to annotate cache-fronting
-    queries in the artifact.
+    the sole hardneg-probe consumer. Used by perfbench's ``memo.hits``
+    counter to tell cache-consuming queries from the rest.
     """
     mod = getattr(fn, "__module__", "") or ""
     if mod.endswith("queries.graph_ops"):

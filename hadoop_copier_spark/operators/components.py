@@ -57,8 +57,8 @@ def connected_components(
     column named like `src`) adds isolated vertices, which label
     themselves.
 
-    ``stats`` (optional out-param, round 18 — bench_cc_scaling.py's
-    instrumentation hook): filled with {"rounds": int,
+    ``stats`` (optional out-param, round 18 — an instrumentation hook):
+    filled with {"rounds": int,
     "changed_per_round": [int, ...], "n_edges_sym": int, "n_nodes": int}
     so a probe can RECORD the O(log diameter) convergence claim and the
     per-round exchange volumes instead of asserting them in prose. The

@@ -687,9 +687,8 @@ def pq_ann_topk(
     over k*32 metadata rows per query. Any rerank_factor >= 1 routes
     through the exact rescore (factor 1 = rescore exactly the ADC top-k,
     so returned SCORES are always exact cosines on that path); only
-    rerank_factor=0/None returns raw ADC dot products — the
-    measurement-only path bench_ann.py uses to quantify compression
-    loss. Rank fidelity on planted duplicates is property-tested in
+    rerank_factor=0/None returns raw ADC dot products — a
+    measurement-only path that quantifies compression loss. Rank fidelity on planted duplicates is property-tested in
     tests/test_llm_ops.py. NULL vectors drop on both sides; dim must be
     divisible by ``m``."""
     from pyspark.sql import Window
@@ -778,7 +777,7 @@ def ivfpq_ann_topk(
     ``k * rerank_factor`` candidates per query and the FINAL top-k is
     re-scored with exact full-precision cosine (_exact_rerank) — the
     standard fix for PQ's quantization tail (random-tail recall@5
-    measured 0.38 without it, bench/ann_results.json r13; 0.94 at the
+    measured 0.38 without it in round 13; 0.94 at the
     default 32, from the measured sweep over rerank_factor x n_codes —
     the fixture's random 64-dim tails are near-orthogonal, so 4-bit ADC
     ranks them noisily and the shortlist must be generous; k*32 rows

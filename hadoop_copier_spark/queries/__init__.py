@@ -22,8 +22,4 @@ from . import tpch_analogs  # noqa: F401,E402
 from . import udfs  # noqa: F401,E402
 from . import windows  # noqa: F401,E402
 
-# MUST import last: aliases re-register existing Query objects under
-# sort-first names to re-point the driver's 50-entry CORRECTNESS window.
-from . import aliases  # noqa: F401,E402
-
 __all__ = ["REGISTRY", "Query", "register"]

@@ -683,8 +683,7 @@ def xh_weighted_mix(spark, sf_dir):
     layout, and re-running over an appended corpus never flips earlier
     decisions. Pure scan -> project -> filter, no shuffle except the
     output sort; at 100 TB this is a map-only pass whose selectivity is
-    exactly the configured mixture. Queued for the r8 driver window per
-    the pinned rotation policy (aliases.py)."""
+    exactly the configured mixture."""
     bucket = (
         _h60(F.concat_ws(":", F.col("doc_id").cast("string"), F.col("text")))
         % F.lit(1000000)
@@ -737,8 +736,7 @@ def xh_chunk_dedup(spark, sf_dir):
     boilerplate already seen elsewhere. One shuffle keyed on the 60-bit
     chunk hash (uniform by construction; duplicate groups are tiny, so
     the per-hash row_number window never skews), then a partial-agg
-    rollup back to doc_id. Queued for the r8 driver window per the
-    pinned rotation policy (aliases.py)."""
+    rollup back to doc_id."""
     from pyspark.sql import Window as W
 
     t = _with_tokens(tbl(spark, sf_dir, "documents")).filter(F.size("tk") > 0)
@@ -824,8 +822,7 @@ def xh_filter_funnel(spark, sf_dir):
     corpus loss. All predicates are exact integer arithmetic (the
     repetition ratio is the cross-multiplied distinct-token test, no
     float division). Scan -> project -> 5-group partial agg: only five
-    rows cross the shuffle at any corpus size. Queued for the r8 driver
-    window per the pinned rotation policy (aliases.py)."""
+    rows cross the shuffle at any corpus size."""
     j = tbl(spark, sf_dir, "documents").select(
         "lang",
         "n_chars",
@@ -876,8 +873,7 @@ def xh_outlier_trim(spark, sf_dir):
     every re-run) cut at identical rows, where percentile interpolation
     would be float-tie-fragile. Both windows share the lang partition
     key: one hash exchange carries the row_number, the group count, AND
-    the final per-lang aggregate. Queued for the r8 driver window per
-    the pinned rotation policy (aliases.py)."""
+    the final per-lang aggregate."""
     from pyspark.sql import Window as W
 
     d = tbl(spark, sf_dir, "documents")
@@ -931,8 +927,7 @@ def xh_incremental_dedup(spark, sf_dir):
     aggregated once, and because the batch-side window and the
     history join both key on the SAME uniform content hash, the join
     rides the window's existing partitioning (no extra exchange between
-    them). Queued for the r8 driver window per the pinned rotation
-    policy (aliases.py)."""
+    them)."""
     from pyspark.sql import Window as W
 
     d = tbl(spark, sf_dir, "documents")
@@ -991,8 +986,7 @@ def xh_consistent_sample(spark, sf_dir):
     cluster layouts, and mostly stable under corpus growth (a new doc
     displaces at most one of the k). One lang-keyed exchange; the filter
     discards everything beyond k inside each partition before the output
-    sort. Queued for the r8 driver window per the pinned rotation policy
-    (aliases.py)."""
+    sort."""
     from pyspark.sql import Window as W
 
     d = tbl(spark, sf_dir, "documents")
@@ -1231,8 +1225,7 @@ def xh_cdc_dedup(spark, sf_dir):
     chunk hash (uniform by construction, duplicate groups tiny so the
     per-hash row_number never skews), then a partial-agg rollup back to
     doc_id. The DuckDB oracle replays the IDENTICAL greedy boundary walk
-    (see _cdc_oracle) so the profile hash-matches bit-for-bit. Queued for
-    the R13 driver window per the pinned rotation policy (aliases.py)."""
+    (see _cdc_oracle) so the profile hash-matches bit-for-bit."""
     from pyspark.sql import Window as W
 
     from ..operators.chunking import cdc_chunks
@@ -1280,8 +1273,7 @@ def xh_quality_topk(spark, sf_dir):
     Scale shape: bounded two-level top-K — O(K) accumulator state per
     (language, partition), O(langs x partitions x K) exchange rows, never
     a per-language global sort (the window form sorts a language's ENTIRE
-    corpus in one reducer). Queued for the R13 driver window per the
-    pinned rotation policy (aliases.py)."""
+    corpus in one reducer)."""
     from ..functions.text import quality_score
     from ..operators.topk import grouped_topk
 
@@ -1387,8 +1379,7 @@ def xh_span_dedup(spark, sf_dir):
     gram-hash partial agg (HAVING >= 2 distinct docs) and the probe is a
     SEMI join on that same hash; the interval union is a per-doc window
     over dup positions only (bounded by doc length, never corpus-wide);
-    the rollup is one doc_id exchange. Queued for the R13 driver window
-    per the pinned rotation policy (aliases.py)."""
+    the rollup is one doc_id exchange."""
     d = _with_tokens(tbl(spark, sf_dir, "documents"))
     t = d.select("doc_id", "tk", F.size("tk").alias("n")).filter(F.col("n") > 0)
     garr = F.when(
@@ -1492,8 +1483,7 @@ def xh_norm_dedup(spark, sf_dir):
 
     Scale shape: one projection (regex + md5, whole-stage codegen) and
     ONE uniform content-hash partial-agg exchange — identical cost to
-    exact dedup at any corpus size. Queued for the R13 driver window per
-    the pinned rotation policy (aliases.py)."""
+    exact dedup at any corpus size."""
     d = tbl(spark, sf_dir, "documents").select(
         "doc_id",
         F.md5("text").alias("raw_h"),
@@ -1598,8 +1588,7 @@ def xh_winnow_fingerprint(spark, sf_dir):
     fingerprint set then carries ~1/w of the gram volume into ONE uniform
     fp-hash partial agg (HAVING >= 2 distinct docs) whose probe is a
     broadcast-or-shuffle equi join on the same hash; the rollup is one
-    doc_id exchange. Queued for the R13 driver window per the pinned
-    rotation policy (aliases.py)."""
+    doc_id exchange."""
     d = _with_tokens(tbl(spark, sf_dir, "documents"))
     t = d.select("doc_id", "tk", F.size("tk").alias("n")).filter(F.col("n") > 0)
     garr = F.when(
@@ -1888,8 +1877,7 @@ def xh_source_dup_matrix(spark, sf_dir):
     (content-hash, source) with its min doc_id — ONE uniform exchange;
     the self-join joins those collapsed rows on the hash, so per-hash
     fan-out is bounded by sources^2 (domain cardinality, never corpus
-    size); the pair rollup is sources^2-bounded. Queued for the R13
-    driver window per the pinned rotation policy (aliases.py)."""
+    size); the pair rollup is sources^2-bounded."""
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     cs = (
         tbl(spark, sf_dir, "documents")
@@ -1977,9 +1965,8 @@ GROUP BY r.u ORDER BY doc_id"""
 
 
 def _multi_signal_edges(spark, sf_dir):
-    """The multi-signal dedup edge set, factored out (round 18) so
-    bench_cc_scaling.py can probe the SAME edges the production query
-    consolidates. Returns (chg, near, pairs): the checkpointed
+    """The multi-signal dedup edge set, factored out (round 18) so a
+    probe can reach the SAME edges the production query consolidates. Returns (chg, near, pairs): the checkpointed
     content-hash frame (doc_id, ch, keep, n — reused by the provenance
     flags), the checkpointed verified LSH near-dup pairs, and the
     exact-star ∪ near edge union the CC runs on."""
@@ -2026,8 +2013,7 @@ def xh_multi_signal_dedup(spark, sf_dir):
     join, and the consolidation is O(log diameter) pointer-jumping CC
     (operators/components.py) over edge counts linear in dup volume;
     the provenance flags are two hash-keyed probes. Oracle: DuckDB
-    recursive min-reachability over the identical edge set. Queued for
-    the R13 driver window per the pinned rotation policy (aliases.py)."""
+    recursive min-reachability over the identical edge set."""
     from ..operators.components import dedup_clusters
 
     d = tbl(spark, sf_dir, "documents")
@@ -2158,8 +2144,8 @@ def xh_containment_pairs(spark, sf_dir):
     )
 
 
-# The production edit-block knobs — the values bench_edit_tuning.py's
-# recorded decision rule chose (recall floor 0.99, then min candidate
+# The production edit-block knobs — the values the round-17 edit-block
+# sweep's recorded decision rule chose (recall floor 0.99, then min candidate
 # volume): 16-char end keys + width-8 length bands measure planted
 # recall 0.990 at 779 candidates on the sweep corpus, vs 0.54/668 for
 # the r16 home-band 12-char-prefix block and 0.996/2782 for the
@@ -2170,8 +2156,8 @@ _EDIT_BAND_W = 8
 
 def _edit_block_frames(spark, sf_dir, max_id=None):
     """(probe, home) frames for the production edit-neardup block
-    (round 17 — config CHOSEN FROM MEASUREMENT, VERDICT r16 #4,
-    `bench/edit_tuning_results.json`): the probe side explodes each doc
+    (round 17 — config CHOSEN FROM MEASUREMENT, VERDICT r16 #4): the
+    probe side explodes each doc
     to its <= 2 possible partner length bands (l div W and
     (l+3) div W — a dist<=3 partner's length is in [l, l+3], so the
     SHORTER side's probes cover the partner's home band BY
@@ -2303,9 +2289,9 @@ def xh_edit_neardup(spark, sf_dir):
     band by construction — no boundary miss class), keyed by the
     16-char (_EDIT_KEY_LEN) PREFIX in one pass and the 16-char SUFFIX
     in the other (an
-    edit rarely touches both ends; the 2-band LSH analog). The swept
-    decision record is `bench/edit_tuning_results.json` (VERDICT r16
-    #4, rule: recall floor 0.99 then min candidate volume): this block
+    edit rarely touches both ends; the 2-band LSH analog). The round-17
+    sweep chose it (VERDICT r16 #4, rule: recall floor 0.99 then min
+    candidate volume): this block
     measures planted-recall 0.990 at 779 candidates vs 0.54 at 668 for
     the r16 single-pass home-band prefix block (max-recall corner:
     0.996 at 2782 — 3.6x the candidates for +0.006 recall); the
@@ -2384,8 +2370,7 @@ def xh_edit_recall_eval(spark, sf_dir):
     production blocked candidate pair set, then emits one summary row
     of tp/fp/fn and integer-ppm precision/recall. Since round 17 the
     candidate side is the MEASURED window-probe prefix-UNION-suffix
-    block (VERDICT r16 #4, bench/edit_tuning_results.json — this very
-    audit's sweep chose it: planted recall 0.990 vs 0.54 for the r16
+    block (VERDICT r16 #4 — this very audit's sweep chose it: planted recall 0.990 vs 0.54 for the r16
     home-band prefix block), whose one remaining declared miss class —
     an edit touching BOTH the first and last _EDIT_KEY_LEN=16 chars — is pinned as
     counted-fn by the planted tests in tests/test_curation_props.py,
@@ -2406,10 +2391,10 @@ def xh_edit_recall_eval(spark, sf_dir):
 
 def _edit_recall_frame(spark, sf_dir, max_id=None):
     """xh_edit_recall_eval's body with a parametrizable audit bound
-    (round 18, VERDICT r17 #5): bench_edit_organic.py runs it with
-    max_id=None — the FULL corpus at sf0.1 and sf1 — to record the
-    block's ORGANIC miss rate next to the planted sweep number in
-    bench/edit_tuning_results.json. The registered query keeps the
+    (round 18, VERDICT r17 #5): max_id=None audits the FULL corpus, the
+    block's ORGANIC miss rate next to the planted sweep number (organic
+    recall 1.000000 at sf0.1 and sf1 in round 18). The registered query
+    keeps the
     doc_id < 300 subset (its DuckDB oracle mirrors that bound)."""
     d = tbl(spark, sf_dir, "documents")
     if max_id is not None:
@@ -2449,8 +2434,8 @@ def _edit_recall_frame(spark, sf_dir, max_id=None):
         .withColumn("is_exact", F.lit(True))
     )
     # candidate side: the PRODUCTION block (xh_edit_neardup — since
-    # round 17 the measured window-probe prefix-UNION-suffix block,
-    # bench/edit_tuning_results.json), unverified pairs
+    # round 17 the measured window-probe prefix-UNION-suffix block),
+    # unverified pairs
     bprobe, bhome = _edit_block_frames(spark, sf_dir, max_id=max_id)
     cand = _edit_block_pairs(bprobe, bhome).withColumn(
         "is_cand", F.lit(True)

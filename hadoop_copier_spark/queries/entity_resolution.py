@@ -45,8 +45,8 @@ ORDER BY brand, lv""",
 )
 def xh_fuzzy_match(spark, sf_dir):
     """Fuzzy entity matching over product names, round-18 blocking chosen
-    by the RECORDED decision rule of bench_er_tuning.py (VERDICT r17 #3;
-    bench/er_tuning_results.json): PassJoin segment signatures — the only
+    by the RECORDED decision rule of a 7-strategy blocking sweep (VERDICT
+    r17 #3): PassJoin segment signatures — the only
     swept strategy with planted recall 1.0 at the lowest x4-replication
     candidate volume (93.2M vs lenwin4's 182.7M; the r17-era first∪last
     token key scored 0.667, missing every both-token edit class). Blocking
@@ -271,7 +271,7 @@ def passjoin_candidates(p, raw: bool = False):
 
     all_pairs = pairs.unionByName(tiny_pairs)
     # raw=True: the pre-distinct join output (one row per segment hit) —
-    # what each candidate actually costs at the verify, used by
-    # bench_er_tuning.py's volume accounting; production verifies
+    # what each candidate actually costs at the verify, the blocking
+    # sweep's volume measure; production verifies
     # MAP-SIDE on this frame and distincts the verified integer rows
     return all_pairs if raw else all_pairs.distinct()

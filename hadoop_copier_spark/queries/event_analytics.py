@@ -640,10 +640,9 @@ def xh_subseq_blocked(spark, sf_dir):
     users are uniform, a straggler when one user owns millions of
     events. Here the largest partition is bounded by
     min(peak-rate x block_span_sec, block_rows + m-1) regardless of
-    how big any single series grows — measured in
-    bench/subseq_skew_results.json (planted hot-user corpus: the
-    per-user-window plan's straggler task vs this plan's bounded
-    tasks). The cost of the bound: one extra bounded aggregate + a
+    how big any single series grows — measured on a planted hot-user
+    corpus (the per-user-window plan's straggler task vs this plan's
+    bounded tasks). The cost of the bound: one extra bounded aggregate + a
     (m-1)/block_rows row duplication (~0.01% at the default 65,536).
 
     Exactness argument: global per-user sequence indexes are
@@ -703,9 +702,7 @@ def xh_decayed_counts(spark, sf_dir):
     is ONE uniform event_type partial agg — partial sums combine
     map-side, so the exchange carries event-type cardinality, not event
     rows. BIGINT headroom: 2^30 units x up to ~2^33 rows per type; at
-    larger per-type row counts lower the unit scale (documented knob).
-    Queued for the R13 driver window per the pinned rotation policy
-    (aliases.py)."""
+    larger per-type row counts lower the unit scale (documented knob)."""
     ev = tbl(spark, sf_dir, "events")
     ref_day = ev.agg(F.max(F.to_date("ts")).alias("d")).collect()[0]["d"]
     e = ev.select(
@@ -773,8 +770,7 @@ def xh_k_anonymity(spark, sf_dir):
     partial-distinct expansion combines map-side, so the exchange
     carries near-class-cardinality, not event rows; the per-type rollup
     then reduces class-cardinality rows. Nothing is corpus-quadratic
-    and nothing collects. Queued for the R13 driver window per the
-    pinned rotation policy (aliases.py)."""
+    and nothing collects."""
     cls = (
         tbl(spark, sf_dir, "events")
         .groupBy("event_type", F.to_date("ts").alias("day"))

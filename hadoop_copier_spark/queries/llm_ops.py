@@ -211,8 +211,7 @@ def p_ann_ivfpq(spark, sf_dir):
     members from 8-byte PQ codes. The layout a 100 TB vector corpus
     ships (cluster = partition key, codes = row payload). Planted-dup
     rank-1 recall, determinism and brute-force recall property-checked
-    in tests/test_llm_ops.py; wall+recall vs the other strategies
-    measured in bench_ann.py."""
+    in tests/test_llm_ops.py."""
     from ..operators.similarity import ivfpq_ann_topk
 
     e = tbl(spark, sf_dir, "embeddings")
@@ -551,7 +550,7 @@ def xp_training_pipeline(spark, sf_dir):
     # stage resumes by read_snapshot of the committed version instead of
     # re-running gate+dedup, exactly how a 100 TB run stages it.
     # wipe=True clears the table on each invocation (fresh v1 every run,
-    # no version accumulation across bench/sweep loops)
+    # no version accumulation across repeated runs)
     stage = curation_stage_table(wipe=True)
     write_snapshot(
         gated.join(keep_exact.select("doc_id"), "doc_id"),
@@ -619,8 +618,7 @@ def xh_embed_quantize(spark, sf_dir):
     the emitted per-vector profile (range, sum, L1 mass, scale) is what
     a quantization-quality monitor tracks. Map-only over the embeddings
     scan (the array is materialized before its lambda consumers — the
-    CSE pitfall in SCALE.md); only the output sort shuffles. Queued for
-    the r8 driver window per the pinned rotation policy (aliases.py)."""
+    CSE pitfall in SCALE.md); only the output sort shuffles."""
     e = tbl(spark, sf_dir, "embeddings")
     m = e.withColumn(
         "maxabs",
@@ -793,9 +791,7 @@ def xh_pagerank_quantized(spark, sf_dir):
     Iterative scale shape (same as xp_pagerank): links normalized once
     and localCheckpoint'ed, per round ONE equi join + one
     partial-agg exchange, dangling mass via a 1-row broadcast; rounds
-    fuse lazily and ONE eager checkpoint materializes the chain. Queued
-    for the R13 driver window per the pinned rotation policy
-    (aliases.py)."""
+    fuse lazily and ONE eager checkpoint materializes the chain."""
     from ..operators.pagerank import pagerank_quantized
 
     o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -927,8 +923,7 @@ def xh_pca_power(spark, sf_dir):
     round one broadcast join on the 64-row v (doc-space matvec = one
     uniform vec_id partial agg) + one equi join on vec_id (dim-space
     matvec = one 64-row partial agg) + a 1-row max broadcast. Nothing
-    vocabulary- or corpus-sized ever reaches the driver. Queued for the
-    R13 driver window per the pinned rotation policy (aliases.py)."""
+    vocabulary- or corpus-sized ever reaches the driver."""
     e = tbl(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     eu = (
         e.select("vec_id", F.posexplode("embedding").alias("dim", "x"))

@@ -544,8 +544,8 @@ def xp_stream_stream_join(spark, sf_dir):
     Returns one summary row: emitted pair count, micro-batch count, and
     whether the pair set equals the batch interval join of the two
     halves (the equivalence bit the driver's rows-only check surfaces;
-    tests/test_streaming.py and record_streaming.py assert it directly,
-    plus the late-row drop case).
+    tests/test_streaming.py asserts it directly, plus the late-row drop
+    case).
 
     Scale shape: both sides carry a 1 h event-time watermark and the
     join bounds r_ts to a 5-minute range, so the state store holds only

@@ -747,8 +747,7 @@ def xh_source_gini(spark, sf_dir):
     (range-repartition + pid-keyed prefix windows + O(P) driver offsets
     — NEVER the single-partition ROW_NUMBER window the naive spelling
     plans, q35's scale fix); the Gini reduction is one partial->final
-    global aggregate. Queued for the R13 driver window per the pinned
-    rotation policy (aliases.py)."""
+    global aggregate."""
     from ..operators.prefix import global_prefix_sum
 
     c = (
@@ -804,8 +803,7 @@ def xh_stratified_split(spark, sf_dir):
     SPANS partitions, and ranks are fixed up from O(P x sources) driver
     metadata rows + pid-local windows; NEVER the naive one-task-per-
     source ROW_NUMBER sort. Per-source totals attach via a broadcast of
-    the domain-cardinality counts frame. Queued for the R13 driver
-    window per the pinned rotation policy (aliases.py)."""
+    the domain-cardinality counts frame."""
     from ..operators.prefix import grouped_rank
 
     d = tbl(spark, sf_dir, "documents").select(
@@ -909,8 +907,7 @@ def xh_dsir_weights(spark, sf_dir):
     (bounded metadata, not data); the two corpus totals are an O(1)
     driver scalar off that frame; the per-bucket weight table
     BROADCASTS back onto the exploded features, so the corpus shuffles
-    exactly once more (the per-doc rollup on doc_id). Queued for the
-    R13 driver window per the pinned rotation policy (aliases.py)."""
+    exactly once more (the per-doc rollup on doc_id)."""
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     t = (
         tbl(spark, sf_dir, "documents")
@@ -1036,8 +1033,7 @@ def xh_split_leakage(spark, sf_dir):
     Scale shape: the split reuses grouped_rank's skew-safe range
     machinery; the audit adds ONE distinct on train content hashes and
     one hash-keyed LEFT probe to flag val/test docs (exact-dedup cost),
-    then a domain-bounded source rollup. Queued for the R13 driver
-    window per the pinned rotation policy (aliases.py)."""
+    then a domain-bounded source rollup."""
     assign = xh_stratified_split(spark, sf_dir).select(
         "doc_id", "source", "split"
     )

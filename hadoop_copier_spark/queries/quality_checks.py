@@ -420,8 +420,7 @@ def xh_bloom_prune(spark, sf_dir):
     100 TB this is the cheapest possible pre-join prune: the bitmap costs
     m/32 longs on the wire per executor versus a full key-set hash
     relation for a semi-join, and false positives are removed by the real
-    join later. Queued for the R13 driver window per the pinned rotation
-    policy (aliases.py)."""
+    join later."""
     from ..operators.bloom import bloom_build, bloom_probe
 
     dim = (
@@ -486,8 +485,7 @@ def xh_robust_stats(spark, sf_dir):
     Scale shape: inherently two-pass (MAD needs the median first) — two
     lang-keyed partial-agg exchanges plus a final rollup, with the tiny
     per-language med/MAD frames BROADCAST back onto the corpus each
-    pass; the documents never shuffle. Queued for the R13 driver window
-    per the pinned rotation policy (aliases.py)."""
+    pass; the documents never shuffle."""
     d = (
         tbl(spark, sf_dir, "documents")
         .filter(F.col("n_chars").isNotNull())
@@ -707,8 +705,7 @@ def xh_hll_registers(spark, sf_dir):
     tiny rows — the corpus never shuffles; register fill + rollup run on
     a 256-row frame. At 100 TB an HLL union across sources/shards is
     this same max-merge, which is why registers (not estimates) are the
-    emitted state. Queued for the R14 driver window per the pinned
-    rotation policy (aliases.py)."""
+    emitted state."""
     h = tbl(spark, sf_dir, "documents").select(
         F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long").alias("h")
     )
@@ -790,8 +787,8 @@ def cms_counts(df, text_col: str = "text"):
     union by pointwise ADDITION, so a streaming foreachBatch SUM-merges
     these <=256 rows per micro-batch into running registers that equal
     the batch sketch exactly (mirrors hll_bucket_rho's role for the HLL
-    family; used by xh_cms_registers, tests/test_streaming.py and
-    record_streaming.py's incremental-CMS check)."""
+    family; used by xh_cms_registers and tests/test_streaming.py's
+    incremental-CMS check)."""
     toks = df.select(
         F.explode(
             F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != "")

@@ -530,8 +530,7 @@ def xh_pmi_counts(spark, sf_dir):
     token-keyed partial-agg exchange (map-side collapse first); the
     top-50 bigram set rides TakeOrderedAndProject (never a global sort)
     and then BROADCASTS into the two unigram lookups — the big unigram
-    frame never re-shuffles for the join. Queued for the R13 driver
-    window per the pinned rotation policy (aliases.py)."""
+    frame never re-shuffles for the join."""
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     d = (
         tbl(spark, sf_dir, "documents")
@@ -610,8 +609,7 @@ def xh_source_overlap(spark, sf_dir):
     token-keyed distinct exchange — so the self-join joins vocabulary
     rows, not occurrences; per-token pair fan-out is bounded by
     sources^2 (domain cardinality, not corpus size); the pair aggregate
-    is sources^2-row-bounded and the size lookups broadcast. Queued for
-    the R13 driver window per the pinned rotation policy (aliases.py)."""
+    is sources^2-row-bounded and the size lookups broadcast."""
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     d = (
         tbl(spark, sf_dir, "documents")
@@ -700,8 +698,7 @@ def xh_oov_rate(spark, sf_dir):
     rows (vocabulary cardinality, not corpus size) and the membership
     probe is a broadcast LEFT ANTI join — the corpus's exploded tokens
     never shuffle for the probe; the per-doc rollup is one doc_id
-    exchange. Queued for the R13 driver window per the pinned rotation
-    policy (aliases.py)."""
+    exchange."""
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     t = (
         tbl(spark, sf_dir, "documents")

@@ -557,8 +557,8 @@ _BASKET_DECIMAL_AT = 3_000_000
 # A-priori step-1 prune (VERDICT r14 #5) engages past this order count.
 # Below it the pair expansion is already cheap and the prune's extra
 # verification job costs more than it saves; above it the C(basket,2)
-# expansion is the suite's worst x16 scaler (8.0x wall, measured in
-# bench/tpch_scaling_results.json) and pruning the item stream to the
+# expansion is the suite's worst x16 scaler (8.0x wall, measured by the
+# x16 TPC-H scaling probe) and pruning the item stream to the
 # frequent parts cuts the pair exchange before it grows.
 _BASKET_PRUNE_MIN_ORDERS = 500_000
 

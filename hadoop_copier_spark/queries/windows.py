@@ -313,8 +313,7 @@ def xh_scd2_intervals(spark, sf_dir):
     Spark plans ONE hash exchange on o_custkey with two in-partition
     sorts, then a partial-agg rollup on (custkey, status, grp); no global
     sort until the final output ORDER BY. (first_orderkey is globally
-    unique, making the output order total.) Queued for the r8 driver
-    window per the pinned rotation policy (aliases.py)."""
+    unique, making the output order total.)"""
     o = tbl(spark, sf_dir, "orders")
     w_all = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w_st = W.partitionBy("o_custkey", "o_orderstatus").orderBy(

@@ -32,7 +32,6 @@ def stream_tumbling_counts(
     src_dir: str,
     queryName: str,
     available_now: bool = False,
-    shuffle_partitions: int | None = None,
 ):
     """Tumbling 10-min window count + exact-cents sum per event_type
     (complete mode -> memory sink); final table must equal batch q61,
@@ -43,17 +42,7 @@ def stream_tumbling_counts(
     micro-batch per file under maxFilesPerTrigger — then STOPS, so a
     bench can awaitTermination() and measure pure work with no
     processAllAvailable poll/idle tax. Default stays the continuous
-    trigger the equivalence tests drive with processAllAvailable.
-
-    ``shuffle_partitions`` bounds the STATE partition count, exactly like
-    stream_interval_join's knob (r18 build): the aggregation state here is
-    domain-bounded — one row per (10-min window, event_type), a few
-    hundred keys over any corpus — so per-batch cost is state-store
-    open/commit count, not data. r19 measured at sf0.1/local[32]:
-    32 stores/batch -> 14-17 s for 20 batches; 8 -> 7.9-9.0 s; 4 -> 7.0 s
-    (same 20 micro-batches, same final table). Default None keeps the
-    session conf — the input-side scan stays parallel either way (the
-    map stage before the state exchange is sized by the file split)."""
+    trigger the equivalence tests drive with processAllAvailable."""
     events = _read_stream(spark, src_dir)
     agg = (
         events.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
@@ -73,16 +62,7 @@ def stream_tumbling_counts(
     w = agg.writeStream.outputMode("complete").format("memory").queryName(queryName)
     if available_now:
         w = w.trigger(availableNow=True)
-    if shuffle_partitions is None:
-        return w.start()
-    # state-partition count binds from the session conf at first-batch
-    # planning; restore AFTER start (same pattern as stream_interval_join)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        return w.start()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return w.start()
 
 
 def stream_dedup(spark: SparkSession, src_dir: str, queryName: str):
@@ -190,7 +170,7 @@ def stream_interval_join(
     watermark + range worth of rows per side: left rows older than
     (watermark - 5 min) and right rows older than the watermark are evicted,
     and INPUT rows below the watermark are dropped (the late-row contract
-    record_streaming.py's check pins). Inner join emits eagerly as matches
+    tests/test_streaming.py pins). Inner join emits eagerly as matches
     arrive, so at end-of-replay the memory sink equals the batch interval
     join exactly. At 100 TB each side shuffles once on user_id; per-user
     state is bounded by the 5-minute range, not by history."""

@@ -30,8 +30,9 @@ conversions the driver uses, so:
 * date-vs-midnight-timestamp pairs still MATCH (driver-green q41/q50
   stay locally green): both normalize to ``YYYY-MM-DD 00:00:00``.
 
-The legacy value-level helpers (``_norm_value``/``normalize``/
-``result_hash``) are retained for tests that hash Spark-side rows only.
+The value-level helpers (``_norm_value``/``normalize``/``result_hash``)
+hash Spark-side rows only; perfbench's recorded P-class hashes
+(``perfbench/expected.json``) come from ``result_hash``.
 """
 
 from __future__ import annotations
@@ -63,7 +64,7 @@ def duck_connect(sf_dir: str) -> "duckdb.DuckDBPyConnection":
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):  # Spark directory-style output (.sf1)
+        if os.path.isdir(path):  # Spark directory-style output
             path = f"{path}/*.parquet"
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
@@ -158,15 +159,6 @@ def canon_pdf(pdf: pd.DataFrame) -> tuple[list[str], list[tuple]]:
     return out_cols, rows
 
 
-def pd_result_hash(pdf: pd.DataFrame) -> str:
-    _, rows = canon_pdf(pdf)
-    h = hashlib.sha256()
-    for row in rows:
-        h.update("|".join(row).encode("utf-8"))
-        h.update(b"\n")
-    return h.hexdigest()
-
-
 def compare(query_fn, oracle: str, spark, sf_dir: str, con=None) -> list[str]:
     """Driver-faithful compare: both sides through pandas, then the
     serialized-row diff. Returns a list of mismatch descriptions
@@ -248,21 +240,3 @@ def result_hash(columns: list[str], rows) -> str:
         h.update("|".join(row).encode("utf-8"))
         h.update(b"\n")
     return h.hexdigest()
-
-
-def run_spark(query_fn, spark, sf_dir):
-    df = query_fn(spark, sf_dir)
-    return df.columns, [tuple(r) for r in df.collect()]
-
-
-def run_oracle(sql: str, sf_dir: str, con=None):
-    own = con is None
-    con = con or duck_connect(sf_dir)
-    try:
-        cur = con.execute(sql)
-        cols = [d[0] for d in cur.description]
-        rows = cur.fetchall()
-        return cols, rows
-    finally:
-        if own:
-            con.close()

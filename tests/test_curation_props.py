@@ -817,8 +817,7 @@ def test_edit_neardup_planted_mutations(spark, tmp_path):
 
 def test_edit_recall_eval_counts_planted_miss_classes(spark, tmp_path):
     """Planted cases for xh_edit_recall_eval against the ROUND-17
-    measured block (window-probe bands, prefix UNION suffix keys —
-    bench/edit_tuning_results.json): the two r16 miss classes are now
+    measured block (window-probe bands, prefix UNION suffix keys): the two r16 miss classes are now
     CAUGHT — a prefix edit via the suffix pass, a band-boundary length
     crossing via the shorter side's (l+3)-band probe — while the ONE
     remaining declared miss class, an edit touching BOTH the first and

@@ -1,7 +1,7 @@
-"""Pins for hadoop_copier_spark.memo — the memoized-cache registry the
-bench's warm pass and gate retries depend on (ADVICE r16 medium: a gate
-retry must be able to clear exactly the caches the offender fronts, or
-a regression in a cached stage is silently cleared by a warm re-run)."""
+"""Pins for hadoop_copier_spark.memo — the memoized-cache registry that
+perfbench's ``memo.keys_built`` and ``memo.hits`` counters read: a
+benchmark must be able to tell which caches a query fills, or a
+measurement silently includes or skips memoized work."""
 
 from hadoop_copier_spark.memo import clear_memoized_caches, consumed_caches
 from hadoop_copier_spark.operators import similarity
@@ -29,12 +29,10 @@ def test_clear_only_touches_named_cache():
 def test_consumed_caches_covers_every_cache_using_query():
     """Every registry query whose module owns a cache must be mapped to
     it, and the sole hardneg consumer must resolve by name — if a new
-    cache-consuming family appears without a consumed_caches rule, the
-    bench would retry it against a baseline that measured more work."""
+    cache-consuming family appears without a consumed_caches rule,
+    perfbench's ``memo.hits`` counter would not see it."""
     by_cache = {}
     for name, q in REGISTRY.items():
-        if "alias" in q.tags:
-            continue
         for c in consumed_caches(q.fn):
             by_cache.setdefault(c, []).append(name)
     assert "xh_bfs_hops" in by_cache["graph_edges"]
@@ -48,10 +46,9 @@ def test_consumed_caches_covers_every_cache_using_query():
 
 def test_every_module_level_cache_is_registered():
     """Staleness guard: any module-level ``*_CACHE`` dict added anywhere
-    in the package MUST be wired into memo._caches(), or the bench's
-    warm pass / gate retries silently measure less work than baselines
-    for whatever new family memoizes state (the exact ADVICE r16 hole,
-    kept closed structurally)."""
+    in the package MUST be wired into memo._caches(), or perfbench's
+    ``memo.keys_built`` silently misses whatever new family memoizes
+    state (the ADVICE r16 hole, kept closed structurally)."""
     import importlib
     import pkgutil
 
@@ -81,18 +78,12 @@ def test_clear_then_rebuild_is_lazy(spark, sf_smoke):
     assert before == after
 
 
-def test_per_key_eviction_only_removes_own_keys():
-    """ADVICE r17: tpch_probes holds one entry per (session, sf_dir,
-    site), each built by the FIRST query using that site — whole-cache
-    clears keyed on one fronter per cache NAME let a later site-builder's
-    warm re-run measure less work than its first run. The per-key
-    protocol: snapshot diffs attribute keys to their builder, and
-    eviction removes exactly those — other queries' keys survive."""
-    from hadoop_copier_spark.memo import (
-        clear_memoized_caches,
-        evict_cache_keys,
-        snapshot_cache_keys,
-    )
+def test_snapshot_diff_attributes_each_key_to_its_query():
+    """tpch_probes holds one entry per (session, sf_dir, site), each built
+    by the FIRST query using that site. Diffing snapshots taken around
+    each query attributes every key to the query that built it, and
+    keys other caches gain in between land under their own cache name."""
+    from hadoop_copier_spark.memo import snapshot_cache_keys
 
     clear_memoized_caches()
     try:
@@ -109,17 +100,9 @@ def test_per_key_eviction_only_removes_own_keys():
         graph_ops._EDGE_CACHE[("app", "sf")] = "edges"
         post = snapshot_cache_keys()
         built_q2 = {c: post[c] - mid[c] for c in post if post[c] - mid[c]}
-
-        # q2's warm re-run evicts ONLY its own keys
-        out = evict_cache_keys(built_q2)
-        assert out == {"tpch_probes": 1, "graph_edges": 1}
-        assert ("app", "sf", "site_c") not in tpch_analogs._PROBE_CACHE
-        assert ("app", "sf", "site_a") in tpch_analogs._PROBE_CACHE
-        assert ("app", "sf", "site_b") in tpch_analogs._PROBE_CACHE
-
-        # q1's retry evicts its two sites; double-evicting is a no-op
-        assert evict_cache_keys(built_q1) == {"tpch_probes": 2}
-        assert evict_cache_keys(built_q1) == {}
-        assert not tpch_analogs._PROBE_CACHE
+        assert built_q2 == {
+            "tpch_probes": {("app", "sf", "site_c")},
+            "graph_edges": {("app", "sf")},
+        }
     finally:
         clear_memoized_caches()

@@ -6,15 +6,8 @@ import pytest
 from hadoop_copier_spark.queries import REGISTRY
 from hadoop_copier_spark.testing import compare
 
-# "alias" entries are the driver-window re-pointing (queries/aliases.py):
-# same Query objects under sort-first names — skip them here or every
-# aliased compare would run twice.
-H_QUERIES = sorted(
-    name for name, q in REGISTRY.items() if q.oracle and "alias" not in q.tags
-)
-P_QUERIES = sorted(
-    name for name, q in REGISTRY.items() if not q.oracle and "alias" not in q.tags
-)
+H_QUERIES = sorted(name for name, q in REGISTRY.items() if q.oracle)
+P_QUERIES = sorted(name for name, q in REGISTRY.items() if not q.oracle)
 
 
 @pytest.mark.parametrize("name", H_QUERIES)
@@ -31,17 +24,15 @@ def test_p_query_runs(name, spark, sf_oracle):
     assert df.count() >= 0
 
 
-def test_alias_window_fidelity():
-    """The driver window (alphabetically-first 50 registry names) must be
-    exactly the rotation aliases, each binding the IDENTICAL fn and oracle
-    objects as its ledgered target (queries/aliases.py)."""
-    from hadoop_copier_spark.queries.aliases import LEDGER as ledger, _alias_name
+def test_spark_entry_exposes_each_query_once():
+    """``__spark_entry__`` exposes each registry entry once, under its own
+    name: one distinct function per name, and oracle SQL for exactly the
+    H-class names."""
+    import __spark_entry__
 
-    assert len(ledger) == 50
-    aliases = {n for n, q in REGISTRY.items() if "alias" in q.tags}
-    window = set(sorted(REGISTRY)[:50])
-    assert window == aliases == {_alias_name(t) for t in ledger}
-    for target in ledger:
-        alias = REGISTRY[_alias_name(target)]
-        assert alias.fn is REGISTRY[target].fn
-        assert alias.oracle is REGISTRY[target].oracle
+    fns = __spark_entry__.queries()
+    assert list(fns) == sorted(REGISTRY)
+    assert len({id(fn) for fn in fns.values()}) == len(fns)
+    for name, q in REGISTRY.items():
+        assert q.name == name
+    assert set(__spark_entry__.oracle_sql()) == set(H_QUERIES)

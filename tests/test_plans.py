@@ -343,8 +343,6 @@ def test_no_query_plans_a_single_partition_exchange(spark, sf_smoke):
     above a sort/window/scan is flagged."""
     offenders = []
     for name, q in sorted(REGISTRY.items()):
-        if "alias" in q.tags:
-            continue
         try:
             text = explain_str(q.fn(spark, sf_smoke), "simple")
         except Exception as e:  # plan must at least build
@@ -429,7 +427,7 @@ def test_no_unplanned_nested_loop_or_cartesian_joins(spark, sf_smoke):
     }
     offenders = []
     for name, q in sorted(REGISTRY.items()):
-        if "alias" in q.tags or name in allowed:
+        if name in allowed:
             continue
         try:
             text = explain_str(q.fn(spark, sf_smoke))

@@ -18,14 +18,17 @@ Kiveris et al., "Connected Components in MapReduce and Beyond"
 
 At 100 TB: labels and edges are both shuffled on their join keys each
 round; edge count, not node count, dominates. State per round is one
-(node, comp) table — localCheckpoint truncates the growing lineage so the
-plan stays flat (without it, round k replays rounds 1..k-1). The driver
-only ever sees a 1-row convergence probe per round, never data.
+(node, comp) table — :func:`iterate` checkpoints it so the plan stays flat
+(without it, round k replays rounds 1..k-1). The driver only ever sees a
+1-row convergence probe per round, never data.
+
+:func:`iterate` is also the round loop of PageRank (operators/pagerank.py)
+and of the fixed-budget graph queries (queries/graph_ops.py).
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,26 +47,68 @@ def release_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
+    probe: Optional[Callable[[DataFrame, DataFrame], bool]] = None,
+) -> DataFrame:
+    """Run up to ``max_rounds`` rounds of ``state = step(state)`` with the
+    lineage cut every round, and return the last state, materialized. The
+    one place the engine's iterative operators checkpoint round frames and
+    free them.
+
+    Each round's frame is a lazy localCheckpoint of ``step(state)``: it
+    truncates the logical plan (a state read twice per round would
+    otherwise double the plan every round) without a job of its own.
+
+    * With ``probe``, ``probe(new, old)`` is the round's one action and
+      its True ends the loop early. It must touch every partition of
+      ``new`` (a global aggregate or a full join does; a limit scan does
+      not), so that it materializes the whole checkpoint. The previous
+      round's frame is released once ``new`` is materialized.
+    * Without ``probe``, the rounds form a lazy chain and ONE eager
+      checkpoint at the end materializes it; only then is the chain
+      released (freeing a still-lazy link is the
+      CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND race).
+
+    Under AQE, building a lazy checkpoint already runs the shuffle stages
+    below it, so a round still costs a few Spark jobs even without a
+    probe. The ``state`` passed in is never released: it may be a frame
+    other operators share. A zero-round call returns an eager checkpoint
+    of ``state``, so the result outlives the caller releasing whatever
+    ``state`` was built from."""
+    rounds = []  # this loop's own round frames, never the caller's state
+    for _ in range(max_rounds):
+        new = step(state).localCheckpoint(eager=False)
+        done = probe is not None and probe(new, state)
+        if probe is not None:
+            for old in rounds:  # new is materialized: the old round may go
+                release_local_checkpoint(old)
+            rounds = []
+        rounds.append(new)
+        state = new
+        if done:
+            break
+    if probe is not None and rounds:
+        return state  # the last probe materialized it
+    out = state.localCheckpoint()
+    for old in rounds:
+        release_local_checkpoint(old)
+    return out
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     nodes: Optional[DataFrame] = None,
     max_iter: int = 50,
-    stats: Optional[dict] = None,
 ) -> DataFrame:
     """Return (node, component) where component = MIN node id reachable
     from `node` over the undirected edge set. `nodes` (optional, single
     column named like `src`) adds isolated vertices, which label
-    themselves.
-
-    ``stats`` (optional out-param, round 18 — an instrumentation hook):
-    filled with {"rounds": int,
-    "changed_per_round": [int, ...], "n_edges_sym": int, "n_nodes": int}
-    so a probe can RECORD the O(log diameter) convergence claim and the
-    per-round exchange volumes instead of asserting them in prose. The
-    two extra count() jobs run only when stats is requested; the
-    production path (stats=None) is unchanged."""
+    themselves."""
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # materialize once, EAGERLY: everything below (vertex frame, self-edge
     # union, initial labels) derives from sym, and the upstream edge
@@ -93,37 +138,8 @@ def connected_components(
         verts.select("u", F.col("u").alias("v"))
     ).localCheckpoint(eager=False)
     labels = verts.select(F.col("u").alias("node"), F.col("u").alias("comp"))
-    # ADVICE r18 (medium): the SUM(comp) convergence probe is only exact
-    # for integral ids — casting a string doc id to decimal yields NULL,
-    # every round's sum is NULL, and None == None would end the loop
-    # after round 1 with unconverged labels. This generic operator
-    # accepts any orderable id type, so non-integral ids take the
-    # type-agnostic join-based changed-count probe instead (the pre-r18
-    # spelling; one extra join per round, correctness first).
-    from pyspark.sql import types as T
 
-    _sum_probe = isinstance(
-        labels.schema["comp"].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    )
-    # with no rounds, no later job may materialize labels before `sym` is released
-    labels = labels.localCheckpoint(eager=max_iter <= 0)
-    prev_sum = (
-        labels.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        if _sum_probe
-        else None
-    )
-    if stats is not None:
-        # n_edges_sym keeps its pre-r19 meaning: REAL symmetric edges,
-        # excluding the self-edge rows the fold added
-        stats["n_edges_sym"] = sym.count()
-        stats["n_nodes"] = labels.count()
-        stats["rounds"] = 0
-        stats["changed_per_round"] = []
-
-    for _ in range(max_iter):
+    def step(labels: DataFrame) -> DataFrame:
         # (1) neighbor step: pull the min label across incoming edges —
         # the self-edge rows make the min include the node's own label,
         # so this one join + aggregate IS the full update (the pre-r19
@@ -144,77 +160,67 @@ def connected_components(
         # it is also the cheaper shape at 100 TB (2 joins per ~3x
         # reduction vs 3 joins per ~5x).
         hop = stepped.select(F.col("node").alias("cnode"), F.col("comp").alias("ccomp"))
-        jumped = stepped.join(hop, stepped.comp == hop.cnode, "left").select(
+        return stepped.join(hop, stepped.comp == hop.cnode, "left").select(
             "node",
             F.least(F.col("comp"), F.coalesce(F.col("ccomp"), F.col("comp"))).alias("comp"),
         )
-        # Lazy checkpoint: the convergence probe below is the round's ONE
-        # Spark job — it fully materializes the checkpoint as a side effect
-        # (a global aggregate touches every partition; an incremental
-        # limit scan could persist only some partitions and leave the
-        # lineage live). Eager checkpoint + separate probe was 2
-        # jobs/round; per-round job count is what dominates wall time on
-        # small graphs.
-        #
-        # r18 (guide §2.4): convergence is read off SUM(comp) instead of
-        # joining the new labels back onto the old ones. Hash-Min labels
-        # are monotone non-increasing per node (every update is
-        # least(comp, ...)), so the label SUM strictly decreases exactly
-        # when any label changed — equal sums <=> fixpoint. That drops a
-        # whole (node)-keyed join of two full label sets from every
-        # round. DECIMAL(38,0) keeps the sum exact at any scale (SUM of
-        # 2^63-bounded ids over arbitrarily many rows cannot wrap).
-        jumped = jumped.localCheckpoint(eager=False)
-        if _sum_probe:
-            changed = None
-            cur_sum = jumped.agg(
-                F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]["s"]
-        else:
-            # type-agnostic fallback: count changed labels directly (this
-            # one join-job both materializes the checkpoint and decides
-            # convergence — same job count as the sum probe)
-            changed = (
-                jumped.alias("n")
-                .join(labels.alias("o"), "node")
+
+    # The convergence probe is each round's ONE action, and it
+    # materializes the round's checkpoint en route (both spellings below
+    # touch every partition). r18 (guide §2.4): convergence is read off
+    # SUM(comp) instead of joining the new labels back onto the old ones.
+    # Hash-Min labels are monotone non-increasing per node (every update
+    # is least(comp, ...)), so the label SUM strictly decreases exactly
+    # when any label changed — equal sums <=> fixpoint. That drops a
+    # whole (node)-keyed join of two full label sets from every round.
+    # DECIMAL(38,0) keeps the sum exact at any scale (SUM of 2^63-bounded
+    # ids over arbitrarily many rows cannot wrap).
+    #
+    # ADVICE r18 (medium): the sum is only exact for integral ids —
+    # casting a string doc id to decimal yields NULL, every round's sum
+    # is NULL, and None == None would end the loop after round 1 with
+    # unconverged labels. This generic operator accepts any orderable id
+    # type, so non-integral ids take the type-agnostic changed-count
+    # probe instead (one join per round, correctness first).
+    from pyspark.sql import types as T
+
+    def label_sum(frame: DataFrame):
+        return frame.agg(
+            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
+        ).collect()[0]["s"]
+
+    if isinstance(
+        labels.schema["comp"].dataType,
+        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
+    ):
+        last = [label_sum(labels)]
+
+        def converged(new: DataFrame, old: DataFrame) -> bool:
+            s = label_sum(new)
+            done, last[0] = s == last[0], s
+            return done
+    else:
+
+        def converged(new: DataFrame, old: DataFrame) -> bool:
+            return (
+                new.alias("n")
+                .join(old.alias("o"), "node")
                 .filter(F.col("n.comp") != F.col("o.comp"))
                 .count()
+                == 0
             )
-            cur_sum = None
-        if stats is not None:
-            # instrumentation-only extra job: the recorded per-round
-            # changed counts keep their meaning for the scaling probes
-            stats["rounds"] += 1
-            stats["changed_per_round"].append(
-                changed
-                if changed is not None
-                else jumped.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.comp") != F.col("o.comp"))
-                .count()
-            )
-        superseded = labels
-        labels = jumped
-        release_local_checkpoint(superseded)  # free last round's blocks now
-        # round 1 materialized sym_all, so the raw-edge checkpoint it was
-        # built from is no longer referenced — free it before later rounds
-        release_local_checkpoint(sym)
-        if (cur_sum == prev_sum) if _sum_probe else (changed == 0):
-            break
-        prev_sum = cur_sum
-    release_local_checkpoint(sym)  # no-op when round 1 already freed it
-    release_local_checkpoint(sym_all)  # returned labels no longer need edges
-    release_local_checkpoint(verts)
+
+    labels = iterate(labels, step, max_iter, converged)
+    for frame in (sym, sym_all, verts):  # the labels no longer read them
+        release_local_checkpoint(frame)
     return labels
 
 
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-                   nodes: Optional[DataFrame] = None,
-                   stats: Optional[dict] = None) -> DataFrame:
+                   nodes: Optional[DataFrame] = None) -> DataFrame:
     """Cluster near-dup pairs: (doc_id, cluster_id) with cluster_id the
     minimum doc id of the duplicate cluster (the canonical doc to keep).
     Feed it the output of near_dup_pairs(); singleton docs (no pair) keep
-    themselves when `nodes` supplies the full id set. ``stats`` passes
-    through to connected_components (probe instrumentation)."""
-    cc = connected_components(pairs, src=id_a, dst=id_b, nodes=nodes, stats=stats)
+    themselves when `nodes` supplies the full id set."""
+    cc = connected_components(pairs, src=id_a, dst=id_b, nodes=nodes)
     return cc.select(F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id"))

@@ -21,12 +21,14 @@ operators/components.py (Hash-Min CC):
   join's build side is provably a single row, so it is the optimal
   plan, and the round stays fully lazy until its single
   convergence-probe action);
-* rank state is one (node, rank) table per round, localCheckpoint
-  (eager=False) so the L1-delta convergence probe materializes it as the
-  round's ONE Spark job; superseded checkpoint blocks are freed
-  immediately (release_local_checkpoint, ADVICE r1).
+* rank state is one (node, rank) table per round, run through
+  components.iterate: with ``tol > 0`` the L1-delta convergence probe is
+  the round's one action and superseded rounds are freed as the next
+  one materializes; with ``tol <= 0`` the rounds chain lazily and one
+  eager checkpoint at the end materializes them.
 
-The driver only ever sees the per-round 1-row delta probe — never data.
+The driver only ever sees the per-round 1-row delta probe (none at all
+with ``tol <= 0``) — never data.
 At 100 TB edge count dominates; both per-round shuffles are on uniform
 join keys, and rounds are O(1/log(1/damping) * log(1/tol)) regardless of
 graph size.
@@ -36,34 +38,25 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .components import release_local_checkpoint
+from .components import iterate, release_local_checkpoint
 
 __all__ = ["pagerank", "pagerank_quantized"]
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    max_iter: int = 20,
-    tol: float = 1e-8,
-    nodes: Optional[DataFrame] = None,
-) -> DataFrame:
-    """(node, rank) over the DISTINCT directed edge set; ranks sum to 1
-    (dangling mass is redistributed uniformly, the standard stochastic
-    completion). ``nodes`` (optional single-column frame) adds isolated
-    vertices, which receive the teleport + dangling share. Stops when the
-    L1 delta between rounds drops below ``tol`` or after ``max_iter``;
-    ``tol <= 0`` runs exactly ``max_iter`` rounds with NO per-round
-    action (fixed-budget mode — the rounds fuse into the caller's job)."""
-    if not 0.0 < damping < 1.0:
-        raise ValueError("damping must be in (0, 1)")
-    # materialize the (possibly expensive) edge derivation ONCE: vert,
-    # deg, links and dangling all re-read it; released after setup
+def _link_frame(
+    edges: DataFrame, src: str, dst: str, nodes: Optional[DataFrame], *cols
+) -> tuple[DataFrame, int, bool]:
+    """(links, n, has_dangling) for both PageRanks. ``links`` holds
+    (src, dst, dst_has_out) plus ``cols``, which may read ``is_edge``
+    (1 on a real edge, 0 on a self-edge row) and ``outdeg`` (src's real
+    out-degree); it is materialized, and the caller releases it. ``n``
+    counts vertices and ``has_dangling`` says whether one has no real
+    out-edge."""
+    # materialize the (possibly expensive) edge derivation ONCE: vert and
+    # links both re-read it; released once links is materialized
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
@@ -93,7 +86,6 @@ def pagerank(
     # the old per-round ranks⋈dangling join stage is gone.
     from pyspark.sql.window import Window
 
-    w_src = Window.partitionBy("src")
     links = (
         e.select("src", "dst", F.lit(1).alias("is_edge"))
         .union(
@@ -103,13 +95,11 @@ def pagerank(
                 F.lit(0).alias("is_edge"),
             )
         )
-        .withColumn("outdeg", F.sum("is_edge").over(w_src))
+        .withColumn("outdeg", F.sum("is_edge").over(Window.partitionBy("src")))
         .select(
             "src",
             "dst",
-            F.when(F.col("is_edge") == 1, F.lit(1.0) / F.col("outdeg"))
-            .otherwise(F.lit(0.0))
-            .alias("inv_deg"),
+            *cols,
             F.when(F.col("is_edge") == 0, F.col("outdeg") > 0).alias("dst_has_out"),
         )
         .localCheckpoint(eager=False)
@@ -124,20 +114,53 @@ def pagerank(
     # rows whose vertex has no real out-edge (the old limit-probe,
     # which could not ride a lazy checkpoint anyway: a limit scan may
     # leave partitions unmaterialized).
-    _stats = links.agg(
+    stats = links.agg(
         F.count(F.when(F.col("dst_has_out").isNotNull(), 1)).alias("n"),
         F.count(F.when(~F.col("dst_has_out"), 1)).alias("n_dangling"),
     ).collect()[0]
-    n = int(_stats["n"])
-    if n == 0:
-        # pin the (empty) result before its inputs' blocks are released
-        ret = vert.select("node", F.lit(0.0).alias("rank")).localCheckpoint()
-        for frame in (e, links, vert):
-            release_local_checkpoint(frame)
-        return ret
-    has_dangling = int(_stats["n_dangling"]) > 0
+    for frame in (e, vert):  # links is self-contained now
+        release_local_checkpoint(frame)
+    return links, int(stats["n"]), int(stats["n_dangling"]) > 0
 
-    release_local_checkpoint(e)  # links/vert now self-contained
+
+def _power_iteration(
+    links: DataFrame,
+    rank: str,
+    init: Column,
+    contrib: Column,
+    share: Optional[Column],
+    update: Column,
+    rounds: int,
+    probe=None,
+) -> DataFrame:
+    """(node, ``rank``) after ``rounds`` power-iteration rounds over
+    ``links`` (see components.iterate for ``probe``), releasing
+    ``links``. Every vertex starts at ``init``; per round a link
+    carries ``contrib`` (over the joined rank row) to its dst, ``share``
+    is each vertex's part of the dangling mass ``dmass`` (None: no
+    dangling vertex), and ``update`` is the new rank over ``t``, the
+    vertex's contribution total plus its share."""
+
+    def step(ranks: DataFrame) -> DataFrame:
+        sums = (
+            links.join(ranks, links.src == ranks.node)
+            .select("dst", contrib.alias("c"), "dst_has_out")
+            .groupBy("dst")
+            .agg(
+                F.sum("c").alias("contrib"),
+                F.max("dst_has_out").alias("has_out"),  # self-edge row only
+            )
+        )
+        t = F.col("contrib")
+        if share is not None:
+            dang = ranks.where(~F.col("has_out")).agg(
+                F.coalesce(F.sum(rank), F.lit(0)).alias("dmass")
+            )
+            sums = sums.join(F.broadcast(dang))  # 1-row build side
+            t = t + share
+        return sums.select(
+            F.col("dst").alias("node"), t.alias("t"), "has_out"
+        ).select("node", update.alias(rank), "has_out")
 
     # the initial rank state is a NARROW filter+project of the
     # checkpointed links (the self-edge rows — exactly one per vertex):
@@ -145,84 +168,66 @@ def pagerank(
     # re-derive it from the checkpoint blocks at projection cost
     ranks = links.where(F.col("dst_has_out").isNotNull()).select(
         F.col("dst").alias("node"),
-        F.lit(1.0 / n).alias("rank"),
+        init.alias(rank),
         F.col("dst_has_out").alias("has_out"),
     )
-    teleport = (1.0 - damping) / n
-    lazy_rounds = []
+    ranks = iterate(ranks, step, rounds, probe)
+    release_local_checkpoint(links)
+    return ranks.select("node", rank)
 
-    for _ in range(max_iter):
-        contrib = (
-            links.join(ranks, links.src == ranks.node)
-            .select(
-                "dst",
-                (F.col("rank") * F.col("inv_deg")).alias("c"),
-                "dst_has_out",
-            )
-            .groupBy("dst")
-            .agg(
-                F.sum("c").alias("contrib"),
-                F.max("dst_has_out").alias("has_out"),  # self-edge row only
-            )
+
+def pagerank(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    damping: float = 0.85,
+    max_iter: int = 20,
+    tol: float = 1e-8,
+    nodes: Optional[DataFrame] = None,
+) -> DataFrame:
+    """(node, rank) over the DISTINCT directed edge set; ranks sum to 1
+    (dangling mass is redistributed uniformly, the standard stochastic
+    completion). ``nodes`` (optional single-column frame) adds isolated
+    vertices, which receive the teleport + dangling share. Stops when the
+    L1 delta between rounds drops below ``tol`` or after ``max_iter``;
+    ``tol <= 0`` runs exactly ``max_iter`` rounds with no per-round
+    action (fixed-budget mode). Rounds are not free even then: under AQE
+    each round's lazy checkpoint runs its shuffle stages as jobs when it
+    is built. Measured warm on 4 cores: 4 Spark jobs a round in
+    fixed-budget mode, 9 with the L1 probe (a 255-edge chain), and 43
+    jobs per warm call of xp_pagerank (8 rounds, sf0.001)."""
+    if not 0.0 < damping < 1.0:
+        raise ValueError("damping must be in (0, 1)")
+    links, n, has_dangling = _link_frame(
+        edges,
+        src,
+        dst,
+        nodes,
+        F.when(F.col("is_edge") == 1, F.lit(1.0) / F.col("outdeg"))
+        .otherwise(F.lit(0.0))
+        .alias("inv_deg"),
+    )
+
+    def l1_converged(new: DataFrame, old: DataFrame) -> bool:
+        delta = (
+            new.alias("a")
+            .join(old.alias("b"), "node")
+            .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("d"))
+            .collect()[0]["d"]
         )
-        if has_dangling:
-            dang = ranks.where(~F.col("has_out")).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass")
-            )
-            stepped = contrib.join(F.broadcast(dang)).select(  # 1-row build
-                F.col("dst").alias("node"),
-                (
-                    F.lit(teleport)
-                    + F.lit(damping) * (F.col("contrib") + F.col("dmass") / n)
-                ).alias("rank"),
-                "has_out",
-            )
-        else:
-            stepped = contrib.select(
-                F.col("dst").alias("node"),
-                (F.lit(teleport) + F.lit(damping) * F.col("contrib")).alias("rank"),
-                "has_out",
-            )
-        new = stepped.localCheckpoint(eager=False)
-        if tol > 0.0:
-            # the round's ONE action: L1 delta, materializes `new` en route
-            delta = (
-                new.alias("a")
-                .join(ranks.alias("b"), "node")
-                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("d"))
-                .collect()[0]["d"]
-            )
-            superseded = ranks
-            ranks = new
-            release_local_checkpoint(superseded)
-            if delta is not None and delta < tol:
-                break
-        else:
-            # fixed-budget mode (tol <= 0): no per-round probe — the
-            # lazy checkpoints truncate each round's LOGICAL plan (ranks
-            # feeds two consumers per round; without truncation the plan
-            # doubles per round) but nothing materializes until the
-            # single eager checkpoint below. Right for small/medium
-            # budgets where per-round job latency dominates;
-            # convergence-driven runs want tol > 0.
-            lazy_rounds.append(new)
-            ranks = new
-    if tol <= 0.0 and lazy_rounds:
-        # ONE job materializes the whole round chain; afterwards the
-        # returned frame is self-contained, so every upstream block —
-        # setup frames AND the intermediate lazy checkpoints — can be
-        # freed (releasing them while the chain was still lazy is the
-        # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND race).
-        ranks = ranks.localCheckpoint()
-        for f in lazy_rounds:
-            release_local_checkpoint(f)
-    if max_iter == 0:
-        # zero-round call: the un-checkpointed initial state still reads
-        # the links blocks — pin it before they are released below
-        ranks = ranks.localCheckpoint()
-    for frame in (links, vert):
-        release_local_checkpoint(frame)
-    return ranks.select("node", "rank")
+        return delta is not None and delta < tol
+
+    n1 = max(n, 1)  # n == 0 runs no round: the empty state is the result
+    return _power_iteration(
+        links,
+        "rank",
+        init=F.lit(1.0 / n1),
+        contrib=F.col("rank") * F.col("inv_deg"),
+        share=F.col("dmass") / n if has_dangling else None,
+        update=F.lit((1.0 - damping) / n1) + F.lit(damping) * F.col("t"),
+        rounds=max_iter if n else 0,
+        probe=l1_converged if tol > 0.0 else None,
+    )
 
 
 def pagerank_quantized(
@@ -252,126 +257,28 @@ def pagerank_quantized(
     hash-checkable against a SQL oracle (xh_pagerank_quantized unrolls
     the same ``rounds`` stages as chained CTEs).
 
-    Fixed-budget only (the ``tol <= 0`` mode of :func:`pagerank`): all
-    rounds fuse lazily — per round ONE equi join on the checkpointed
-    link frame + one partial-agg exchange, dangling mass via a 1-row
-    broadcast — and a single eager checkpoint materializes the chain.
-    Returns (node, rank_units BIGINT); units sum to <= total_units (the
-    floor-division remainders are deliberately dropped, identically in
-    both engines)."""
+    Fixed-budget only (the ``tol <= 0`` mode of :func:`pagerank`, on the
+    same link frame and round loop): per round ONE equi join on the
+    checkpointed link frame + one partial-agg exchange, dangling mass via
+    a 1-row broadcast; the rounds chain lazily and a single eager
+    checkpoint materializes them (xh_pagerank_quantized, 8 rounds, runs
+    61 Spark jobs per warm call at sf0.001 under AQE). Returns (node,
+    rank_units BIGINT); units sum to <= total_units (the floor-division
+    remainders are deliberately dropped, identically in both engines)."""
     if rounds < 0:
         raise ValueError("rounds must be non-negative")
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint()
+    links, n, has_dangling = _link_frame(
+        edges, src, dst, nodes, "is_edge", "outdeg"
     )
-    vert = e.select(F.col("src").alias("node")).union(
-        e.select(F.col("dst").alias("node"))
+    base = total_units // max(n, 1)  # n == 0 runs no round
+    return _power_iteration(
+        links,
+        "rank_units",
+        init=F.lit(base).cast("long"),
+        contrib=F.when(F.col("is_edge") == 1, F.expr("rank_units div outdeg"))
+        .otherwise(F.lit(0))
+        .cast("long"),
+        share=F.expr(f"dmass div {n}") if has_dangling else None,
+        update=F.expr(f"CAST(({3 * base} + 17 * t) div 20 AS BIGINT)"),
+        rounds=rounds if n else 0,
     )
-    if nodes is not None:
-        vert = vert.union(nodes.select(F.col(nodes.columns[0]).alias("node")))
-    vert = vert.distinct().localCheckpoint(eager=False)
-
-    # r18 (guide §2.3/§2.4, mirroring :func:`pagerank`): ONE exchange
-    # builds the link frame — out-degree from a window over the
-    # (real ∪ self)-edge union partitioned by src (output already
-    # hash-partitioned on src; replaces groupBy + join + repartition),
-    # zero-contribution SELF-edges replace the per-round vert-union seed
-    # (identical integer sums: COALESCE(contrib, 0) ≡ sum with a 0 term),
-    # and the self-edge row carries the dangling flag into each round's
-    # groupBy so the dangling mass is a filter+aggregate on the rank
-    # state, not a per-round join. Every value is the same BIGINT the
-    # unrolled-CTE oracle computes — only the plan changed.
-    from pyspark.sql.window import Window
-
-    w_src = Window.partitionBy("src")
-    links = (
-        e.select("src", "dst", F.lit(1).alias("is_edge"))
-        .union(
-            vert.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(0).alias("is_edge"),
-            )
-        )
-        .withColumn("outdeg", F.sum("is_edge").over(w_src))
-        .select(
-            "src",
-            "dst",
-            "is_edge",
-            "outdeg",
-            F.when(F.col("is_edge") == 0, F.col("outdeg") > 0).alias("dst_has_out"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # r19 (guide §1.2): ONE setup job replaces two — this global agg
-    # materializes the lazy links checkpoint (touching every partition)
-    # and its self-edge count IS the old vert.count() (exactly one
-    # self-edge per vertex). See :func:`pagerank`.
-    n = int(
-        links.agg(
-            F.count(F.when(F.col("dst_has_out").isNotNull(), 1)).alias("n")
-        ).collect()[0]["n"]
-    )
-    if n == 0:
-        # pin the (empty) result before its inputs' blocks are released
-        ret = vert.select(
-            "node", F.lit(0).cast("long").alias("rank_units")
-        ).localCheckpoint()
-        for frame in (e, links, vert):
-            release_local_checkpoint(frame)
-        return ret
-    release_local_checkpoint(e)
-
-    base = total_units // n
-    # initial rank state: a narrow filter+project of the checkpointed
-    # links' self-edge rows — no checkpoint, no setup job (r18)
-    ranks = links.where(F.col("dst_has_out").isNotNull()).select(
-        F.col("dst").alias("node"),
-        F.lit(base).cast("long").alias("rank_units"),
-        F.col("dst_has_out").alias("has_out"),
-    )
-    lazy_rounds = []
-    for _ in range(rounds):
-        contrib = (
-            links.join(ranks, links.src == ranks.node)
-            .select(
-                F.col("dst").alias("nnode"),
-                F.when(F.col("is_edge") == 1, F.expr("rank_units div outdeg"))
-                .otherwise(F.lit(0))
-                .cast("long")
-                .alias("c"),
-                "dst_has_out",
-            )
-            .groupBy("nnode")
-            .agg(
-                F.sum("c").alias("contrib"),
-                F.max("dst_has_out").alias("has_out"),  # self-edge row only
-            )
-            .withColumnRenamed("nnode", "node")
-        )
-        dang = ranks.where(~F.col("has_out")).agg(
-            F.coalesce(F.sum("rank_units"), F.lit(0)).cast("long").alias("dmass")
-        )
-        stepped = contrib.join(F.broadcast(dang)).select(  # 1-row build side
-            "node",
-            F.expr(
-                f"CAST(({3 * base} + 17 * (contrib + (dmass div {n}))) div 20 AS BIGINT)"
-            ).alias("rank_units"),
-            "has_out",
-        )
-        new = stepped.localCheckpoint(eager=False)
-        lazy_rounds.append(new)
-        ranks = new
-    if lazy_rounds:
-        ranks = ranks.localCheckpoint()  # ONE job materializes the chain
-        for f in lazy_rounds:
-            release_local_checkpoint(f)
-    else:
-        # zero-round call: the un-checkpointed initial state still reads
-        # the links blocks — pin it before they are released below
-        ranks = ranks.localCheckpoint()
-    for frame in (links, vert):
-        release_local_checkpoint(frame)
-    return ranks.select("node", "rank_units")

@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 from ..tables import load_table, register_views
 
 __all__ = [
-    "tbl", "views", "cents", "dec", "money_sum", "det_avg", "F",
-    "ocents", "odec", "omoney_sum", "odet_avg",
+    "tbl", "views", "cents", "dec", "det_avg", "F",
+    "ocents", "odec", "odet_avg",
     "cents_sum", "ocents_sum", "scratch_dir",
 ]
 
@@ -132,16 +132,6 @@ def ocents_sum(x: str, scale: int = 2) -> str:
     return f"CAST(SUM({ocents(x, scale)}) AS BIGINT)"
 
 
-def money_sum(c: Column | str, alias: str) -> Column:
-    """DEPRECATED for driver-hashed output (VERDICT r3 #1): SUM over
-    DECIMAL(12,2)-reconstructed values widened to DECIMAL(38,2). Exact and
-    order-independent, but the driver's pandas harness serializes the
-    resulting Decimal cells differently per engine — every driver-hashed
-    money aggregate now uses `cents_sum` (BIGINT units) instead. Retained
-    for internal/demo use where a true decimal schema is wanted."""
-    return F.sum(dec(c, 12, 2)).cast("decimal(38,2)").alias(alias)
-
-
 def det_avg(c: Column | str, alias: str, scale: int = 2) -> Column:
     """Deterministic average emitted as DOUBLE: exact integer-cents sum ->
     double (exact conversion below 2^53) -> two IEEE divisions in a fixed
@@ -170,10 +160,6 @@ def odec(x: str, precision: int = 18, scale: int = 2) -> str:
         f"CAST(CAST(FLOOR(({x}) * {10 ** scale} + 0.5) AS DECIMAL({pi},0))"
         f" * {unit} AS DECIMAL({precision},{scale}))"
     )
-
-
-def omoney_sum(x: str) -> str:
-    return f"CAST(SUM({odec(x, 12, 2)}) AS DECIMAL(38,2))"
 
 
 def odet_avg(x: str, scale: int = 2) -> str:

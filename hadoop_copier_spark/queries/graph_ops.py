@@ -27,6 +27,8 @@ iteratively.
 
 from __future__ import annotations
 
+import itertools
+
 from .base import F, tbl
 from .registry import register
 
@@ -346,22 +348,17 @@ def xh_kcore_peel(spark, sf_dir):
     Scale shape: the edge set builds once (basket-bounded expansion +
     ONE uniform (u,v) agg, shared via _weighted_edges); each peel round
     is ONE degree partial agg (2 edge-derived rows per edge) + two
-    node-keyed SEMI joins, EAGERLY checkpointed so round i+1 reads
-    round i's materialized result, never its lineage (one job per
-    round — the operators/components.py discipline). Block release
-    (VERDICT r13 #4, fixing the r13 no-op): only the loop's OWN
-    superseded round frames are freed, via
-    operators.components.release_local_checkpoint (DataFrame.unpersist
-    cannot touch localCheckpoint RDD blocks), and only AFTER the next
-    round's checkpoint is materialized; the shared _EDGE_CACHE frame —
-    six other operators read it — is never a cleanup target. Rounds
-    are a constant, not data-dependent, so the job count is bounded at
-    any corpus size."""
-    from ..operators.components import release_local_checkpoint
+    node-keyed SEMI joins. The rounds run through
+    operators.components.iterate as one lazy checkpoint chain that a
+    single eager checkpoint materializes, so each round reads the last
+    one's checkpoint, never its lineage; the chain's own frames are
+    freed after that, and the shared _EDGE_CACHE frame — six other
+    operators read it — is the loop's input, which iterate never
+    releases (VERDICT r13 #4). Rounds are a constant, not
+    data-dependent, so the job count is bounded at any corpus size."""
+    from ..operators.components import iterate
 
-    e = _edges(spark, sf_dir)
-    own_prev = None  # this loop's own superseded round frame (never the cache)
-    for _ in range(_KCORE_ROUNDS):
+    def peel(e):
         dg = (
             e.select(F.col("u").alias("node"))
             .unionAll(e.select(F.col("v").alias("node")))
@@ -369,18 +366,13 @@ def xh_kcore_peel(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = dg.where(F.col("deg") >= _KCORE_K).select("node")
-        e2 = (
+        return (
             e.join(keep.withColumnRenamed("node", "u"), "u", "semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "semi")
             .select("u", "v")
         )
-        # every round materializes eagerly: a freed localCheckpoint cannot
-        # be recomputed, so round i's blocks may only be released once
-        # round i+1 is fully materialized — never under a still-lazy frame
-        e2 = e2.localCheckpoint(eager=True)
-        if own_prev is not None:  # safe: e2's blocks are live
-            release_local_checkpoint(own_prev)
-        own_prev, e = e2, e2
+
+    e = iterate(_edges(spark, sf_dir), peel, _KCORE_ROUNDS)
     return (
         e.select(F.col("u").alias("part"))
         .unionAll(e.select(F.col("v").alias("part")))
@@ -812,27 +804,30 @@ def xh_bfs_hops(spark, sf_dir):
     Scale shape: the edge set is the shared checkpointed frame
     (_weighted_edges — a filter, no rebuild); each hop is ONE node-keyed
     equi join of the domain-bounded adjacency against the current
-    frontier + one ANTI join against the labeled set, eagerly
-    checkpointed so hop i+1 reads hop i's materialized result, never
-    its lineage; superseded label frames release their blocks via
-    release_local_checkpoint (the k-core discipline — the shared edge
-    cache is never a cleanup target). Labeled-set size is bounded by
-    the reached component, hops are a constant, and the seed is a
-    1-row aggregate, never a collect."""
-    from ..operators.components import release_local_checkpoint
+    frontier + one ANTI join against the labeled set. Hops run through
+    operators.components.iterate (the k-core loop): a lazy checkpoint
+    chain one eager checkpoint materializes, so hop i+1 reads hop i's
+    checkpoint, never its lineage; the shared edge cache is never a
+    cleanup target. Labeled-set size is bounded by the reached
+    component, hops are a constant, and the seed is a 1-row aggregate,
+    never a collect."""
+    from ..operators.components import iterate
 
     e = _edges(spark, sf_dir)
     adj = (
         e.select(F.col("u").alias("ctr"), F.col("v").alias("nbr"))
         .unionAll(e.select(F.col("v").alias("ctr"), F.col("u").alias("nbr")))
     )
-    labeled = (
+    seed = (
         e.agg(F.min("u").alias("node"))
         .where(F.col("node").isNotNull())
         .select("node", F.lit(0).cast("long").alias("hop"))
-        .localCheckpoint(eager=True)
     )
-    for i in range(1, _BFS_ROUNDS + 1):
+
+    hops = itertools.count(1)  # iterate calls expand once per hop, in order
+
+    def expand(labeled):
+        i = next(hops)
         frontier = labeled.where(F.col("hop") == i - 1).select(
             F.col("node").alias("ctr")
         )
@@ -843,9 +838,9 @@ def xh_bfs_hops(spark, sf_dir):
             .join(labeled.select("node"), "node", "anti")
             .select("node", F.lit(i).cast("long").alias("hop"))
         )
-        nxt = labeled.unionByName(new).localCheckpoint(eager=True)
-        release_local_checkpoint(labeled)  # safe: nxt's blocks are live
-        labeled = nxt
+        return labeled.unionByName(new)
+
+    labeled = iterate(seed, expand, _BFS_ROUNDS)
     return labeled.select(F.col("node").alias("part"), "hop").orderBy("part")
 
 
@@ -916,24 +911,19 @@ def xh_label_propagation(spark, sf_dir):
     round is ONE node-keyed equi join (labels onto the domain-bounded
     adjacency), ONE uniform (node, label) partial agg, and a min_by
     struct argmax folded INSIDE the same agg's final step (never a
-    per-node sort; candidate labels per node are degree-bounded);
-    labels checkpoint eagerly per round and superseded frames release
-    their blocks (the k-core discipline — the shared cache is never a
-    cleanup target). Round count is a constant."""
-    from ..operators.components import release_local_checkpoint
+    per-node sort; candidate labels per node are degree-bounded); the
+    rounds run through operators.components.iterate (the k-core loop:
+    one lazy checkpoint chain, one eager checkpoint, the shared cache is
+    never a cleanup target). Round count is a constant."""
+    from ..operators.components import iterate
 
     e = _edges(spark, sf_dir)
     adj = (
         e.select(F.col("u").alias("ctr"), F.col("v").alias("nbr"))
         .unionAll(e.select(F.col("v").alias("ctr"), F.col("u").alias("nbr")))
     )
-    labels = (
-        adj.select(F.col("ctr").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("lbl"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(_LPA_ROUNDS):
+
+    def relabel(labels):
         cnt = (
             adj.join(
                 labels.select(F.col("node").alias("ctr"), "lbl"), "ctr"
@@ -941,17 +931,22 @@ def xh_label_propagation(spark, sf_dir):
             .groupBy(F.col("nbr").alias("node"), "lbl")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        nxt = (
+        return (
             cnt.groupBy("node")
             .agg(
                 F.min(F.struct((-F.col("cnt")).alias("a"), F.col("lbl").alias("l")))
                 .alias("m")
             )
             .select("node", F.col("m.l").alias("lbl"))
-            .localCheckpoint(eager=True)
         )
-        release_local_checkpoint(labels)  # safe: nxt's blocks are live
-        labels = nxt
+
+    labels = iterate(
+        adj.select(F.col("ctr").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("lbl")),
+        relabel,
+        _LPA_ROUNDS,
+    )
     return (
         labels.select(F.col("node").alias("part"), F.col("lbl").cast("long").alias("community"))
         .orderBy("part")

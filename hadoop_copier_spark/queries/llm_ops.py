@@ -696,9 +696,9 @@ def p_pagerank(spark, sf_dir):
     (src, dst, 1/outdeg) ONCE and localCheckpoint'ed; each round is one
     equi join + one map-side-partial sum exchange; dangling mass rides a
     1-row broadcast (the heavy-hitters global-scalar shape, allowlisted
-    in tests/test_plans.py); the driver sees only the per-round L1
-    convergence probe. Golden-checked against a numpy power iteration in
-    tests/test_pagerank.py."""
+    in tests/test_plans.py); with the fixed budget below the driver sees
+    no per-round probe at all, only the top-50 rows. Golden-checked
+    against a numpy power iteration in tests/test_pagerank.py."""
     from ..operators.pagerank import pagerank
 
     o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -712,11 +712,13 @@ def p_pagerank(spark, sf_dir):
     ).union(
         pairs.select(F.col("supp_node").alias("src"), F.col("cust_node").alias("dst"))
     )
-    # fixed 8-round compute budget, tol=0 => no per-round probe: all
-    # rounds fuse lazily into this query's single action (the top of the
-    # ranking settles in the first few rounds); a production quality-prior
-    # run would set tol > 0 and iterate to convergence
-    # (~log(tol)/log(damping) rounds, graph-size-free)
+    # fixed 8-round compute budget, tol=0 => no per-round probe: the
+    # rounds chain lazily and one eager checkpoint materializes them (the
+    # top of the ranking settles in the first few rounds). Under AQE each
+    # round's lazy checkpoint still runs its shuffle stages as jobs: 43
+    # Spark jobs per warm call at sf0.001 on 4 cores, 4 per round. A
+    # production quality-prior run would set tol > 0 and iterate to
+    # convergence (~log(tol)/log(damping) rounds, graph-size-free)
     return (
         pagerank(edges, damping=0.85, max_iter=8, tol=0.0)
         .orderBy(F.col("rank").desc(), "node")
@@ -791,7 +793,8 @@ def xh_pagerank_quantized(spark, sf_dir):
     Iterative scale shape (same as xp_pagerank): links normalized once
     and localCheckpoint'ed, per round ONE equi join + one
     partial-agg exchange, dangling mass via a 1-row broadcast; rounds
-    fuse lazily and ONE eager checkpoint materializes the chain."""
+    chain lazily and ONE eager checkpoint materializes the chain (61
+    Spark jobs per warm call at sf0.001 under AQE)."""
     from ..operators.pagerank import pagerank_quantized
 
     o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -919,7 +922,7 @@ def xh_pca_power(spark, sf_dir):
     unit) and is localCheckpoint'ed (reused 2x per round — NOT released
     here: the returned frame is lazy and still reads those blocks; the
     executor storage is freed with the session, the
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND race pagerank.py documents); per
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND race components.iterate documents); per
     round one broadcast join on the 64-row v (doc-space matvec = one
     uniform vec_id partial agg) + one equi join on vec_id (dim-space
     matvec = one 64-row partial agg) + a 1-row max broadcast. Nothing

@@ -556,12 +556,7 @@ def xp_stream_stream_join(spark, sf_dir):
     from ..tables import load_table
 
     out = scratch_dir("xp_stream_stream_join")
-    # one-shuffle-job split writer (the 100 TB replay shape); 4 state
-    # partitions: at test scale 32 state stores per side per micro-batch
-    # is pure task overhead (r18 measured 14 -> 7.5 s at sf0.1 for 8;
-    # the r19 quiet-host alternating sweep measured stream-phase walls
-    # 8: 3.0-3.2 s / 4: 2.7-2.9 s / 2: 2.9 s, so 4 — per-user join state
-    # is watermark+range bounded, never partition-count bound)
+    # one-shuffle-job split writer (the 100 TB replay shape)
     left_dir, right_dir = replay_events_split_buckets(spark, sf_dir, out, n_chunks=2)
     e = load_table(spark, sf_dir, "events")
     left = e.filter(F.col("event_id") % 2 == 0).select(
@@ -587,9 +582,18 @@ def xp_stream_stream_join(spark, sf_dir):
     # mismatch counters. The distinct's exchange is keyed exactly like
     # the join, so it reuses the same partitioning.
     bdist = batch.select("l_id", "r_id").distinct().withColumn("__b", F.lit(1))
-    q = stream_interval_join(
-        spark, left_dir, right_dir, "xp_ssj_sink", shuffle_partitions=4
-    )
+    # 4 state partitions: the state-store count is bound from
+    # spark.sql.shuffle.partitions when the first batch is planned, and at
+    # test scale 32 state stores per side per micro-batch is pure task
+    # overhead (r18 measured 14 -> 7.5 s at sf0.1 for 8; the r19
+    # quiet-host alternating sweep measured stream-phase walls 8: 3.0-3.2 s
+    # / 4: 2.7-2.9 s / 2: 2.9 s, so 4 — per-user join state is
+    # watermark+range bounded, never partition-count bound). The stream
+    # runs in a session of its own, so the caller's conf is never touched;
+    # its memory sink is a temp view of that session.
+    stream = spark.newSession()
+    stream.conf.set("spark.sql.shuffle.partitions", "4")
+    q = stream_interval_join(stream, left_dir, right_dir, "xp_ssj_sink")
     try:
         # r19 (guide §2.6): the batch side of the equivalence check is a
         # pure function of the events table, independent of the stream —
@@ -610,7 +614,7 @@ def xp_stream_stream_join(spark, sf_dir):
             # materialization shape a 100 TB pair set forbids. ONE
             # full-outer join + aggregate yields pair count and both
             # mismatch directions in a single job.
-            got = spark.sql("SELECT l_id, r_id FROM xp_ssj_sink")
+            got = stream.sql("SELECT l_id, r_id FROM xp_ssj_sink")
             bmat = fut.result()
     finally:
         q.stop()

@@ -368,18 +368,14 @@ def h_hash_split(spark, sf_dir):
     )
 
 
-# One shared shard-count knob for the deterministic corpus shuffle
-# (VERDICT r6 #2). Both the Spark plan and the DuckDB oracle string read
-# THIS constant, so they can never disagree; it is resolved once at import
-# from SPARK_GRAFT_SHUF_SHARDS (cluster runs size it to ~2-3x total
-# cores / desired output files), defaulting to 64 for the local fixtures.
-# det_shuffle_frame() below takes the count as an argument, so the
-# (shard, pos) bijection is testable at any shard count independent of
-# the registered query (tests/test_pipeline_ops.py).
-import os as _os
-
-_SHUF_SHARDS = int(_os.environ.get("SPARK_GRAFT_SHUF_SHARDS", "64"))
-assert _SHUF_SHARDS > 0, "SPARK_GRAFT_SHUF_SHARDS must be a positive integer"
+# The shard count of the deterministic corpus shuffle. Both the Spark plan
+# and the DuckDB oracle string read THIS constant, so they can never
+# disagree. It is part of the result (a doc's (shard, pos) depends on it),
+# so it is not read from the environment. det_shuffle_frame() below takes
+# the count as an argument, so the (shard, pos) bijection is testable at
+# any shard count independent of the registered query
+# (tests/test_pipeline_ops.py).
+_SHUF_SHARDS = 64
 
 
 def det_shuffle_frame(d, n_shards: int):
@@ -430,12 +426,12 @@ def h_det_shuffle(spark, sf_dir):
     gets a (shard, pos) coordinate from a salted portable hash; consuming
     shard-major yields a reproducible pseudo-random permutation of the
     corpus. Sharding IS the scale design: rank is assigned inside
-    {_SHUF_SHARDS} hash shards (SPARK_GRAFT_SHUF_SHARDS — one shared
-    constant feeds both this plan and the oracle SQL above) via a
-    PARTITIONED window (one shuffle on the shard key, per-shard sort) —
-    never a global single-partition window (the q35 lesson, SCALE.md
-    'Windows'); at 100 TB the shard count scales with the cluster and
-    each shard sorts independently."""
+    _SHUF_SHARDS = 64 hash shards (one shared constant feeds both this
+    plan and the oracle SQL above) via a PARTITIONED window (one shuffle
+    on the shard key, per-shard sort) — never a global single-partition
+    window (the q35 lesson, SCALE.md 'Windows'); each shard sorts
+    independently. A cluster-sized shard count is a change of that
+    constant, and of the permutation, on both sides."""
     d = tbl(spark, sf_dir, "documents")
     return det_shuffle_frame(d, _SHUF_SHARDS).orderBy("doc_id")
 

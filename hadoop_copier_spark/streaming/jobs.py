@@ -159,7 +159,6 @@ def stream_interval_join(
     right_dir: str,
     queryName: str,
     watermark: str = "1 hour",
-    shuffle_partitions: int | None = None,
 ):
     """Stream-stream interval join over TWO independent sources — the q21
     batch shape as a streaming job (VERDICT r17 #2): left events joined to
@@ -199,20 +198,9 @@ def stream_interval_join(
         & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 5 MINUTES")),
         "inner",
     ).select("l_id", "r_id", F.col("l_user").alias("user_id"), "l_ts", "r_ts")
-    w = joined.writeStream.outputMode("append").format("memory").queryName(queryName)
-    if shuffle_partitions is None:
-        return w.start()
-    # state-partition count is bound from spark.sql.shuffle.partitions at
-    # first-batch planning; a test-scale join doesn't need the session's 32
-    # state stores per side per batch (pure task overhead at local scale —
-    # a real cluster run would keep the session default). Restore AFTER
-    # start: the planning conf is captured per-query at start time.
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        return w.start()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return (
+        joined.writeStream.outputMode("append").format("memory").queryName(queryName).start()
+    )
 
 
 def stream_running_counts(spark: SparkSession, src_dir: str, queryName: str):

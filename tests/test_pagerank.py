@@ -22,7 +22,7 @@ def _ref(edge_list, damping=0.85, iters=60, extra_nodes=()):
     r = np.full(n, 1.0 / n)
     for _ in range(iters):
         new = np.full(n, (1.0 - damping) / n)
-        dang = sum(r[idx[u]] for u in nodes if not out[u])
+        dang = sum(r[idx[u]] for u in nodes if not out.get(u))
         new += damping * dang / n
         for u, vs in out.items():
             share = damping * r[idx[u]] / len(vs)

@@ -128,16 +128,16 @@ def test_det_shuffle_is_a_deterministic_bijection(spark, sf_smoke):
 
 
 def test_det_shuffle_bijection_holds_at_any_shard_count(spark, sf_smoke):
-    """VERDICT r6 #2: the shard count is a knob (SPARK_GRAFT_SHUF_SHARDS),
-    not a baked constant. The (shard, pos) bijection property must hold at
-    a shard count other than the fixture default of 64 — exercised through
-    the same det_shuffle_frame() the registered query calls."""
+    """det_shuffle_frame takes the shard count as an argument: the
+    (shard, pos) bijection property must hold at a shard count other than
+    the registered query's 64 — exercised through the same
+    det_shuffle_frame() the registered query calls."""
     from hadoop_copier_spark.queries.pipeline_ops import (
         _SHUF_SHARDS,
         det_shuffle_frame,
     )
 
-    assert _SHUF_SHARDS == 64  # fixture default; cluster runs override via env
+    assert _SHUF_SHARDS == 64  # the registered query's shard count
     d = load_table(spark, sf_smoke, "documents")
     n = d.count()
     for n_shards in (7, 129):
@@ -146,8 +146,8 @@ def test_det_shuffle_bijection_holds_at_any_shard_count(spark, sf_smoke):
         assert p["shard"].between(0, n_shards - 1).all()
         for shard, rows in p.groupby("shard"):
             assert sorted(rows["pos"]) == list(range(1, len(rows) + 1)), shard
-    # same doc population, different coordinates — the knob re-shards, it
-    # does not drop or duplicate
+    # same doc population, different coordinates — the shard count
+    # re-shards, it does not drop or duplicate
     assert set(p["doc_id"]) == set(
         det_shuffle_frame(d, 7).toPandas()["doc_id"]
     )

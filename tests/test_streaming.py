@@ -259,6 +259,36 @@ def test_xp_stream_stream_join_reports_equivalence(spark):
     assert row["n_micro_batches"] >= 2
 
 
+def test_xp_stream_stream_join_keeps_caller_shuffle_partitions(spark, monkeypatch):
+    """xp_stream_stream_join plans its stream with 4 shuffle (state)
+    partitions in a session of its own: the caller's
+    spark.sql.shuffle.partitions reads the same before, while and after
+    the stream is started and planned, and the pair set still equals the
+    batch join."""
+    import hadoop_copier_spark.streaming as streaming
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    real = streaming.stream_interval_join
+    seen = {}
+
+    def spy(session, *args, **kwargs):
+        q = real(session, *args, **kwargs)
+        q.processAllAvailable()  # the first batch is planned by now
+        seen["caller"] = spark.conf.get(key)
+        seen["stream"] = session.conf.get(key)
+        seen["state"] = {
+            op["numShufflePartitions"] for op in q.lastProgress["stateOperators"]
+        }
+        return q
+
+    monkeypatch.setattr(streaming, "stream_interval_join", spy)
+    row = REGISTRY["xp_stream_stream_join"].fn(spark, SF).collect()[0]
+    assert seen == {"caller": before, "stream": "4", "state": {4}}
+    assert spark.conf.get(key) == before
+    assert row["equals_batch"] is True
+
+
 def test_watermark_drops_late_event(spark, tmp_path):
     """Append-mode windowed agg with a 10-min watermark: an event arriving
     far below the watermark is dropped from state-finalized windows."""

@@ -38,12 +38,13 @@ always local; remote destinations must be explicit URIs. Listing,
 byte copy, verification, and split-finalize all speak the same interface,
 so a remote cluster is a namespace-config change, not a rewrite.
 
-At 100 TB: listing parallelizes per top-level item; the work-list is
-striped so each executor copies a disjoint file set; no data ever
-flows through the driver; skew (one giant file) is bounded by BYTE-RANGE
-SPLITTING: files larger than ``split_threshold_bytes`` are planned as
-multiple (offset, length) chunk rows, so a 1 TB file becomes ~8192 tasks of
-128 MiB instead of one 1 TB task. ``split_chunk_bytes`` (128 MiB) is a cap:
+At 100 TB: the driver lists every tree in one walk (metadata only; sizes
+ride the listing); the work-list is striped so each executor copies a
+disjoint file set; no data ever flows through the driver; skew (one giant
+file) is bounded by BYTE-RANGE SPLITTING: files larger than
+``split_threshold_bytes`` are planned as multiple (offset, length) chunk
+rows, so a 1 TB file becomes ~8192 tasks of 128 MiB instead of one 1 TB
+task. ``split_chunk_bytes`` (128 MiB) is a cap:
 the planner balances a file's chunks over ``parallelism`` (size /
 parallelism, rounded up to whole copy buffers, never below the 16 MiB
 ``MIN_SPLIT_CHUNK``), so a 272 MiB file on 4 partitions copies as 4 x 68 MiB
@@ -178,20 +179,53 @@ def _validate(request: CopyRequest) -> None:
         raise ValidationError("bandwidth must be positive")
 
 
-def _copy_one_file(src: str, dst: str, max_bytes_per_sec: Optional[int], checksum: bool):
-    """Single-file streamed copy: 64 KiB buffer, token-bucket throttle,
-    MD5 fused into the loop. All I/O through the fs layer (local fast path
-    or pyarrow.fs for URI schemes). Returns (bytes, md5_ok)."""
+def _chunks(f, length: int, short_read):
+    """``BUFFER_SIZE`` reads of ``f`` from its current position: to EOF when
+    ``length < 0``, else exactly ``length`` bytes — an earlier EOF raises
+    ``IOError(short_read(bytes_read_so_far))``."""
+    done = 0
+    while length < 0 or done < length:
+        chunk = f.read(BUFFER_SIZE if length < 0 else min(BUFFER_SIZE, length - done))
+        if not chunk:
+            if length < 0:
+                return
+            raise IOError(short_read(done))
+        done += len(chunk)
+        yield chunk
+
+
+def _copy_one_range(
+    src: str, dst: str, offset: int, length: int, checksum: bool,
+    max_bytes_per_sec: Optional[int] = None,
+):
+    """Copy bytes [offset, offset+length) of ``src`` to the same offset of
+    ``dst``; ``length < 0`` copies the whole file as one stream (the
+    reference-parity path). 64 KiB buffer, token-bucket throttle, source
+    MD5 fused into the read loop; with ``checksum`` the destination is
+    re-read and compared — whole-file MD5, or per range for split files
+    (the S3-multipart-ETag model). All I/O goes through the fs layer
+    (local fast path or pyarrow.fs for URI schemes). Returns
+    (bytes, md5_ok).
+
+    A whole file overwrites its destination (``create``, like R5). A range
+    opens the destination create-if-missing WITHOUT truncate
+    (``open_rw``): concurrent chunk tasks must not clobber each other's
+    ranges, and the planner pre-sizes the temp destination. Disjoint-range
+    writes are safe on POSIX local/NFS and map to ranged multipart PUT on
+    object stores; for append-only HDFS the same plan targets chunk
+    part-files + FileSystem.concat (DistCp strategy). Ranges are only
+    planned when the destination fs ``supports_range_write``."""
     sfs, dfs = fs_for(src), fs_for(dst)
+    whole = length < 0
     src_digest = hashlib.md5() if checksum else None
     total = 0
     window_start = time.monotonic()
     window_bytes = 0
-    with sfs.open_read(src) as fin, dfs.create(dst) as fout:  # overwrite, like R5
-        while True:
-            chunk = fin.read(BUFFER_SIZE)
-            if not chunk:
-                break
+    with sfs.open_read(src) as fin, (dfs.create(dst) if whole else dfs.open_rw(dst)) as fout:
+        if not whole:
+            fin.seek(offset)
+            fout.seek(offset)
+        for chunk in _chunks(fin, length, lambda done: f"Short read at offset {offset + done} of {src}"):
             if src_digest is not None:
                 src_digest.update(chunk)
             fout.write(chunk)
@@ -207,64 +241,20 @@ def _copy_one_file(src: str, dst: str, max_bytes_per_sec: Optional[int], checksu
                     window_bytes = 0
     if not checksum:
         return total, False
-    # verify what actually landed in the destination store
+    # Verify what actually landed in the destination store. No fsync:
+    # verification needs read-your-writes (the closed handle's bytes are in
+    # the page cache), not durability; fsync per chunk measured ~25% off
+    # the whole split-copy throughput.
     dst_digest = hashlib.md5()
     with dfs.open_read(dst) as fin:
-        for chunk in iter(lambda: fin.read(BUFFER_SIZE), b""):
+        if not whole:
+            fin.seek(offset)
+        for chunk in _chunks(fin, length, lambda _: f"Short verify read at offset {offset} of {dst}"):
             dst_digest.update(chunk)
     if dst_digest.digest() != src_digest.digest():
-        raise IOError(f"Checksum mismatch for {dst}")
+        where = "" if whole else f" range [{offset}, {offset + length})"
+        raise IOError(f"Checksum mismatch for {dst}{where}")
     return total, True
-
-
-def _copy_one_range(src: str, dst: str, offset: int, length: int, checksum: bool):
-    """Byte-range chunk copy for split files: read [offset, offset+length)
-    from the source, write it at the same offset of the destination, then
-    (if checksum) re-read the destination range and compare digests — the
-    per-range verification model of S3 multipart ETags. Disjoint-range
-    concurrent writes to one file are safe on POSIX local/NFS and map to
-    ranged multipart PUT on object stores; for append-only HDFS the same
-    plan targets chunk part-files + FileSystem.concat (DistCp strategy).
-    Only planned when the destination fs ``supports_range_write`` (POSIX
-    local today; append-only stores keep the single-stream path).
-    Returns (bytes, md5_ok)."""
-    sfs, dfs = fs_for(src), fs_for(dst)
-    src_digest = hashlib.md5() if checksum else None
-    total = 0
-    # create-if-missing WITHOUT truncate: concurrent chunk tasks must not
-    # clobber each other's ranges. Planner handles stale-overwrite by
-    # pre-truncating the temp destination.
-    with sfs.open_read(src) as fin, dfs.open_rw(dst) as fout:
-        fin.seek(offset)
-        fout.seek(offset)
-        remaining = length
-        while remaining > 0:
-            chunk = fin.read(min(BUFFER_SIZE, remaining))
-            if not chunk:
-                raise IOError(f"Short read at offset {offset + total} of {src}")
-            if src_digest is not None:
-                src_digest.update(chunk)
-            fout.write(chunk)
-            total += len(chunk)
-            remaining -= len(chunk)
-        if not checksum:
-            return total, False
-        # no fsync: verification needs read-your-writes (page-cache
-        # guaranteed through the same handle), not durability; fsync per
-        # chunk measured ~25% off the whole split-copy throughput
-        fout.flush()
-        fout.seek(offset)
-        dst_digest = hashlib.md5()
-        remaining = length
-        while remaining > 0:
-            chunk = fout.read(min(BUFFER_SIZE, remaining))
-            if not chunk:
-                raise IOError(f"Short verify read at offset {offset} of {dst}")
-            dst_digest.update(chunk)
-            remaining -= len(chunk)
-        if dst_digest.digest() != src_digest.digest():
-            raise IOError(f"Checksum mismatch for {dst} range [{offset}, {offset + length})")
-        return total, True
 
 
 class _Rollup(NamedTuple):
@@ -315,10 +305,8 @@ def _make_partition_copier(bandwidth_mb: Optional[int], checksum: bool):
         try:
             if not fs_for(src).exists(src):
                 raise IOError(f"Source path does not exist: {src}")
-            if length >= 0:  # byte-range chunk of a split file
-                nbytes, verified = _copy_one_range(src, write_path, offset, length, checksum)
-            else:  # whole file, single stream (reference-parity path)
-                nbytes, verified = _copy_one_file(src, dst, max_bps, checksum)
+            # throttled requests plan no chunks, so only whole files throttle
+            nbytes, verified = _copy_one_range(src, write_path, offset, length, checksum, max_bps)
             return _Rollup(0, nbytes, int((time.monotonic() - t0) * 1000), verified, None, frozenset())
         except Exception as e:  # per-file containment (R13)
             return _Rollup(
@@ -339,18 +327,6 @@ def _remove_quietly(path: str) -> None:
         fs_for(path).remove(path)
     except OSError:
         pass
-
-
-def _walk_listing_stripe(stripe):
-    """Executor side of distributed listing: walk each (top_dir_name,
-    top_dir_path) in the stripe and emit (name/rel, size) rows. Filesystems
-    re-resolve from the path string per task (fs.py module doc) — the
-    stripe carries nothing but strings."""
-    out = []
-    for dname, droot in stripe:
-        for rel, size in fs_for(droot).walk_files_with_size(droot):
-            out.append((dname + "/" + rel, size))
-    return out
 
 
 def jvm_ugi_login(spark: SparkSession, set_kerberos: bool = True):
@@ -403,23 +379,12 @@ class CopyJobEngine:
         split_threshold_bytes: int = DEFAULT_SPLIT_THRESHOLD,
         split_chunk_bytes: int = DEFAULT_SPLIT_CHUNK,
         login_fn=None,
-        distributed_listing_threshold: int = 4096,
     ):
         self.spark = spark
         self.checksum_enabled = checksum_enabled
         self.parallelism = parallelism
         self.split_threshold_bytes = split_threshold_bytes
         self.split_chunk_bytes = max(1, split_chunk_bytes)
-        # VERDICT r6 #6: a directory item whose TOP-LEVEL entry count
-        # reaches this threshold has its subdirectories enumerated on
-        # executors (one listing task per top-level directory stripe)
-        # instead of a serial driver walk — at 10^8 files the driver walk
-        # is the bottleneck long before driver memory is (the work list
-        # itself stays O(files) metadata either way, like the reference's
-        # driver-side plan). Below the threshold the driver walk is faster
-        # (no job-scheduling latency). The reference lists driver-side
-        # only, so this is an extension, not a parity deviation.
-        self.distributed_listing_threshold = max(1, distributed_listing_threshold)
         self._tasks: dict[str, _Task] = {}
         self._namespace_conf: dict[str, dict] = {}
         # Kerberos login seam (m/service/HdfsFileSystemFactory.java:42-56,
@@ -469,34 +434,6 @@ class CopyJobEngine:
     def namespace_conf(self, namespace: str) -> Optional[dict]:
         return self._namespace_conf.get(namespace)
 
-    # -- listing -----------------------------------------------------------
-
-    def _enumerate_with_sizes(self, sfs, src: str) -> list[tuple]:
-        """Sorted ``(rel, size)`` for every file under directory ``src``.
-
-        Small trees (top-level entry count below
-        ``distributed_listing_threshold``) walk on the driver — one
-        recursive listing, no job latency. At or above it, top-level
-        subdirectories are striped across executors and walked in
-        parallel (R4 at scale: 10^8-file trees enumerate at cluster
-        listing throughput, not one driver thread's). Both paths return
-        the identical sorted listing; only O(files) metadata rows return
-        to the driver, which the work list costs anyway."""
-        entries = sfs.list_dir(src)
-        if len(entries) < self.distributed_listing_threshold:
-            return sfs.walk_files_with_size(src)
-        top_files = [n for n, is_dir in entries if not is_dir]
-        top_dirs = [n for n, is_dir in entries if is_dir]
-        out = [(n, sfs.size(sfs.join(src, n))) for n in top_files]
-        if top_dirs:
-            roots = [(n, sfs.join(src, n)) for n in top_dirs]
-            out += (
-                _stripe(self.spark.sparkContext, roots, self.parallelism)
-                .flatMap(_walk_listing_stripe)
-                .collect()
-            )
-        return sorted(out)
-
     # -- lifecycle ---------------------------------------------------------
 
     def submit(self, request: CopyRequest) -> str:
@@ -544,13 +481,11 @@ class CopyJobEngine:
                 if not sfs.exists(src):
                     raise IOError(f"Source path does not exist: {src}")
                 if sfs.isdir(src):
-                    # (rel, size) in one enumeration — sizes ride the
-                    # listing instead of one size() RPC per file, and big
-                    # trees list on executors (_enumerate_with_sizes)
-                    listing = self._enumerate_with_sizes(sfs, src)
+                    # (rel, size) in one driver walk — sizes ride the
+                    # listing instead of one size() RPC per file
                     pairs = [
                         (sfs.join(src, rel), dfs.join(dst, rel), size)
-                        for rel, size in listing
+                        for rel, size in sfs.walk_files_with_size(src)
                     ]
                     empty_dir = not pairs
                     dfs.mkdirs(dst)

@@ -93,12 +93,6 @@ class LocalFS:
                 out.append((prefix + name, os.path.getsize(os.path.join(r, name))))
         return sorted(out)
 
-    def list_dir(self, p: str) -> list[tuple]:
-        """Sorted non-recursive ``(name, is_dir)`` entries of directory
-        ``p`` — the fan-out unit for distributed listing."""
-        with os.scandir(p) as it:
-            return sorted((e.name, e.is_dir()) for e in it)
-
     def mkdirs(self, p: str) -> None:
         if p:
             os.makedirs(p, exist_ok=True)
@@ -202,20 +196,6 @@ class ArrowFS:
             (posixpath.relpath(info.path, native), info.size)
             for info in fs.get_file_info(sel)
             if info.type == pafs.FileType.File
-        )
-
-    def list_dir(self, p: str) -> list[tuple]:
-        """Sorted non-recursive ``(name, is_dir)`` entries of ``p``."""
-        import pyarrow.fs as pafs
-
-        fs, native = self._resolve(p)
-        sel = pafs.FileSelector(native, recursive=False)
-        return sorted(
-            (
-                posixpath.relpath(info.path, native),
-                info.type == pafs.FileType.Directory,
-            )
-            for info in fs.get_file_info(sel)
         )
 
     def mkdirs(self, p: str) -> None:

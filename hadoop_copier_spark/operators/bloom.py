@@ -14,7 +14,7 @@ is the same trade Spark's own AQE runtime bloom filter makes; here it is
 an explicit, engine-portable operator.
 
 Portability is the point of this implementation: positions come from the
-repo's portable 60-bit md5 hash (h60, queries/dedup_oracle.py), so a SQL
+repo's portable 60-bit md5 hash (``_h60`` below), so a SQL
 engine can rebuild the IDENTICAL bitmap and reproduce even the false
 positives — the registered ``xh_bloom_prune`` query
 (queries/quality_checks.py) hash-checks its pass / true-positive /
@@ -41,8 +41,16 @@ __all__ = ["bloom_build", "bloom_probe", "bloom_position_sql"]
 _WORD = 32  # bits packed per BIGINT word (avoids sign-bit portability)
 
 
+# Portable 60-bit hash: the first 15 hex digits of md5(s) read as an
+# integer. md5 is bit-identical in every engine and 60 bits fit a BIGINT,
+# so Spark (``_h60``) and DuckDB (``_H60_SQL``, formatted with ``s=``)
+# compute the same value. The one definition behind the Bloom positions
+# and every hash-checked query that hashes portably.
+_H60_SQL = "('0x' || substr(md5({s}), 1, 15))::BIGINT"
+
+
 def _h60(col: Column) -> Column:
-    """Portable 60-bit hash — same construction as queries/dedup_oracle."""
+    """Portable 60-bit hash: int(md5(col)[0:15], 16)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
@@ -53,10 +61,8 @@ def _position(key: Column, i: int, m_bits: int) -> Column:
 def bloom_position_sql(key_sql: str, i: int, m_bits: int) -> str:
     """The DuckDB spelling of ``_position`` — one generator feeds both
     engines so the bitmaps cannot drift."""
-    return (
-        f"(('0x' || substr(md5('bl{i}:' || CAST({key_sql} AS VARCHAR)), 1, 15))"
-        f"::BIGINT % {m_bits})"
-    )
+    h = _H60_SQL.format(s=f"'bl{i}:' || CAST({key_sql} AS VARCHAR)")
+    return f"({h} % {m_bits})"
 
 
 def bloom_build(

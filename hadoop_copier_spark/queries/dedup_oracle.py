@@ -38,22 +38,15 @@ from __future__ import annotations
 
 from functools import reduce as _reduce
 
+from ..operators.bloom import _H60_SQL, _h60
+from ..operators.dedup import _minhash_params
 from .base import F, tbl
 from .registry import register
-from ..operators.dedup import _minhash_params
 
 _P = (1 << 61) - 1
 _K = 8          # signature width
 _BANDS = 4      # 4 bands x r=2: catches Jaccard >= ~0.7 with high recall
 _A, _B = _minhash_params(_K)  # same fixed RandomState(42) params as prod
-
-
-def _h60(col):
-    """Portable 60-bit hash: int(md5(s)[0:15], 16) — exact in both engines."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-_H60_SQL = "('0x' || substr(md5({s}), 1, 15))::BIGINT"
 
 
 def nfkc_casefold(col):

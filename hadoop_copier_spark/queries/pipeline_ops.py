@@ -24,6 +24,7 @@ types (BIGINT / DOUBLE / strings — integer-units rule, registry.py).
 
 from __future__ import annotations
 
+from ..operators.bloom import _H60_SQL, _h60
 from .base import F, tbl
 from .registry import register
 
@@ -319,15 +320,6 @@ def h_histogram(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("sum_cents"))
         .orderBy("bin_id")
     )
-
-
-_H60_SQL = "('0x' || substr(md5({s}), 1, 15))::BIGINT"
-
-
-def _h60(col):
-    """Portable 60-bit hash (int(md5[0:15],16)) — exact in both engines;
-    same construction as queries/dedup_oracle.py:_h60."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 @register(

@@ -20,6 +20,7 @@ from typing import Iterator
 
 import pandas as pd
 
+from ..operators.bloom import _H60_SQL
 from .base import F, tbl
 from .registry import register
 
@@ -634,7 +635,7 @@ _HLL_M = 256  # buckets: top 8 bits of the 60-bit hash
 # error of a bucket boundary would land in the wrong register and break the
 # bit-for-bit contract with the DuckDB oracle's exact `//` (ADVICE r13).
 _HLL_REM = 4503599627370496
-_HLL_H60_SQL = "('0x' || substr(md5(text), 1, 15))::BIGINT"
+_HLL_H60_SQL = _H60_SQL.format(s="text")
 # alpha_256 * m^2, computed ONCE in Python and embedded as a repr'd
 # double literal: a `0.7213 / ...` spelled inline parses as DECIMAL in
 # both engines with engine-specific scale rules (probed: estimates

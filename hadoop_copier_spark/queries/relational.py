@@ -325,7 +325,7 @@ def h_orc_roundtrip(spark, sf_dir):
 def _text_roundtrip_oracle() -> str:
     # the hash spelling comes from the SAME module constant the Spark
     # side's _h60 pairs with, so the two can never drift apart
-    from .dedup_oracle import _H60_SQL
+    from ..operators.bloom import _H60_SQL
 
     return f"""SELECT COUNT(*) AS n_lines,
        CAST(SUM(({_H60_SQL.format(s='text')}) % 1000000007)
@@ -353,7 +353,7 @@ def h_text_roundtrip(spark, sf_dir):
     saw the files. Docs are single-line by fixture construction; a real
     corpus dump would escape newlines first (that transform is q04's JSON
     path)."""
-    from .dedup_oracle import _h60
+    from ..operators.bloom import _h60
 
     d = tbl(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     out = scratch_dir("text_roundtrip")

@@ -303,10 +303,7 @@ ORDER BY o_custkey, valid_from, first_orderkey""",
 )
 def xh_scd2_intervals(spark, sf_dir):
     """Slowly-changing-dimension (type 2) interval build via the classic
-    gaps-and-islands subtraction — the hash-checked oracle twin of
-    operators/scd.py scd2_compact (which uses the equivalent lag-based
-    change-flag formulation over the events CDC shape): per customer,
-    consecutive orders sharing
+    gaps-and-islands subtraction: per customer, consecutive orders sharing
     a status collapse into one [valid_from, valid_to] run — the change
     history a dimension table keeps when an attribute flips back and
     forth. Both row_numbers share the o_custkey partition prefix, so

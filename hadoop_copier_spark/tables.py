@@ -25,10 +25,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Small dimension tables that should always be broadcast in joins at any
-# scale (region=5 rows, nation=25 rows — they stay tiny at 100 TB too).
-BROADCAST_DIMS = {"region", "nation"}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":

@@ -583,10 +583,15 @@ def _group_shape(sc, group):
 def test_request_runs_as_one_job_and_one_stage(spark, tree, tmp_path):
     """A copy request, split or not, is a single map-only Spark job: one
     stage of min(parallelism, work rows) tasks, no shuffle, no second
-    action for split destinations."""
+    action for split destinations, and no listing job however many
+    top-level entries a directory has."""
     src, files = tree
     big = tmp_path / "split.bin"
     big.write_bytes(os.urandom(640 * 1024))  # 10 chunks of 64 KiB
+    wide = tmp_path / "wide"
+    for i in range(4096):
+        (wide / f"d{i:04d}").mkdir(parents=True)
+    (wide / "only.bin").write_bytes(b"wide")
     cases = {
         "plain": (
             CopyJobEngine(spark, parallelism=8),
@@ -601,11 +606,17 @@ def test_request_runs_as_one_job_and_one_stage(spark, tree, tmp_path):
             CopyItem(str(big), str(tmp_path / "split_out.bin")),
             min(4, 10),
         ),
+        "wide": (
+            CopyJobEngine(spark, parallelism=8),
+            CopyItem(str(wide), str(tmp_path / "wide_out")),
+            1,
+        ),
     }
     for name, (eng, item, n_tasks) in cases.items():
         st, shape = _submit_shape(spark, eng, item)
         assert st["status"] == "COMPLETED", name
         assert shape == (1, 1, [n_tasks]), name
+    assert (tmp_path / "wide_out" / "only.bin").read_bytes() == b"wide"
 
 
 def _submit_shape(spark, eng, item):
@@ -817,48 +828,3 @@ def test_bare_destination_stays_local_under_remote_default_fs(
     assert st["status"] == "COMPLETED"
     assert st["items"][0]["checksumVerified"] is True
     assert dst.read_bytes() == b"x"
-
-
-def test_distributed_listing_matches_driver_walk(spark, tmp_path):
-    """VERDICT r6 #6: above the top-level-entry threshold, enumeration
-    fans out to executors; the listing, the copy, and the rollup must be
-    identical to the driver-walk path."""
-    import random
-
-    rng = random.Random(1234)
-    src = tmp_path / "deep_src"
-    files = {}
-    for d in range(6):  # 6 top-level dirs + 2 top-level files = 8 entries
-        for f in range(4):
-            rel = f"dir{d}/sub{f % 2}/f{f}.bin"
-            p = src / rel
-            p.parent.mkdir(parents=True, exist_ok=True)
-            data = bytes(rng.getrandbits(8) for _ in range(rng.randrange(1, 4096)))
-            p.write_bytes(data)
-            files[rel] = data
-    for t in range(2):
-        (src / f"top{t}.bin").write_bytes(b"t" * (t + 1))
-        files[f"top{t}.bin"] = b"t" * (t + 1)
-
-    # the two engines differ ONLY in the listing path
-    eng_dist = CopyJobEngine(spark, distributed_listing_threshold=2)
-    eng_driver = CopyJobEngine(spark, distributed_listing_threshold=10**9)
-    listing_dist = eng_dist._enumerate_with_sizes(fs_for(str(src)), str(src))
-    listing_driver = eng_driver._enumerate_with_sizes(fs_for(str(src)), str(src))
-    assert listing_dist == listing_driver
-    assert len(listing_dist) == len(files)
-
-    results = []
-    for eng, sub in ((eng_dist, "out_dist"), (eng_driver, "out_driver")):
-        dst = tmp_path / sub
-        rid = eng.submit(CopyRequest("local", [CopyItem(str(src), str(dst))]))
-        st = eng.status(rid)
-        item = st["items"][0]
-        results.append(
-            (st["status"], item["bytesCopied"], item["checksumVerified"])
-        )
-        for rel, data in files.items():
-            assert (dst / rel).read_bytes() == data, rel
-    assert results[0] == results[1]
-    assert results[0][0] == "COMPLETED"
-    assert results[0][1] == sum(len(d) for d in files.values())

@@ -6,7 +6,10 @@ Each ref is exported (``git archive``) to a temporary directory, where the
 unchanged ``perfbench/run.py`` runs untraced for BENCHMARK.json's
 ``run_seconds``, once per side per pair, alternating which side goes first.
 Prints each run's metrics and ``window_cpu_steal``, then per metric each
-side's quartiles and the pairs HEAD won. The detail line's per-class medians
+side's quartiles, the pairs HEAD won and the change of HEAD's median from
+BASE's. An end-to-end metric also shows its ``bound`` from BENCHMARK.json,
+and ``BREACH`` when HEAD's median is worse than BASE's by more than that
+bound (the no-regression rule). The detail line's per-class medians
 (``op_p50_ms_by_type``: request class for copy_ingest, query for
 sql_analytics) get the same table as ``op_p50_ms[class]``, so a change that
 moves one class and leaves the others alone shows as such. Exits 1 if a
@@ -57,6 +60,7 @@ def main(argv=None) -> int:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    bound = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     work = tempfile.mkdtemp(prefix="perf_ab-")
     try:
         trees = {side: os.path.join(work, side) for side in ("base", "head")}
@@ -75,7 +79,13 @@ def main(argv=None) -> int:
         if b and h:
             wins = sum((y < x) if direction == "lower" else (y > x) for x, y in zip(b, h))
             fmt = " -> ".join("/".join(f"{v:.4g}" for v in quartiles(xs)) for xs in (b, h))
-            print(f"{name:12s} base q1/med/q3 -> head: {fmt}  head wins {wins}/{len(h)}")
+            change = statistics.median(h) / statistics.median(b) - 1
+            worse = change if direction == "lower" else -change
+            limit = ""
+            if name in bound:
+                limit = f" (bound {bound[name]:.0%}{', BREACH' if worse > bound[name] else ''})"
+            print(f"{name:12s} base q1/med/q3 -> head: {fmt}  head wins {wins}/{len(h)}"
+                  f"  median {change:+.1%}{limit}")
     print("steal base/head per pair: " + " ".join(
         f"{x['window_cpu_steal']:.3f}/{y['window_cpu_steal']:.3f}" for x, y in zip(runs["base"], runs["head"])))
     return 0 if all(r["correct"] for side in runs.values() for r in side) else 1

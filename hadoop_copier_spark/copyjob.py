@@ -482,13 +482,16 @@ class CopyJobEngine:
                     raise IOError(f"Source path does not exist: {src}")
                 if sfs.isdir(src):
                     # (rel, size) in one driver walk — sizes ride the
-                    # listing instead of one size() RPC per file
-                    pairs = [
-                        (sfs.join(src, rel), dfs.join(dst, rel), size)
-                        for rel, size in sfs.walk_files_with_size(src)
-                    ]
+                    # listing instead of one size() RPC per file; empty
+                    # subdirectories are made here, as the reference's
+                    # DFS makes each directory it walks (R5), and the
+                    # rest come with their files' parents
+                    files, empty_subdirs = sfs.walk_tree(src)
+                    pairs = [(sfs.join(src, rel), dfs.join(dst, rel), size) for rel, size in files]
                     empty_dir = not pairs
                     dfs.mkdirs(dst)
+                    for rel in empty_subdirs:
+                        dfs.mkdirs(dfs.join(dst, rel))
                 else:
                     pairs = [(src, dst, sfs.size(src))]
                 for s, d, size in pairs:

@@ -81,17 +81,24 @@ class LocalFS:
         return os.path.getsize(p)
 
     def walk_files_with_size(self, root: str) -> list[tuple]:
-        """Sorted ``(relative_path, size)`` of every file under ``root`` —
-        one enumeration pass instead of a walk plus per-file size RPCs.
-        The relative prefix is computed once per directory, not per file
+        """The files half of ``walk_tree``."""
+        return self.walk_tree(root)[0]
+
+    def walk_tree(self, root: str) -> tuple[list[tuple], list[str]]:
+        """Sorted ``(relative_path, size)`` of every file under ``root``,
+        and the sorted relative paths of its empty subdirectories — one
+        enumeration pass instead of a walk plus per-file size RPCs. The
+        relative prefix is computed once per directory, not per file
         (``relpath`` dominated the listing of wide directories)."""
-        out = []
-        for r, _dirs, names in os.walk(root):
+        files, empty = [], []
+        for r, dirs, names in os.walk(root):
             prefix = os.path.relpath(r, root)
+            if prefix != os.curdir and not dirs and not names:
+                empty.append(prefix)
             prefix = "" if prefix == os.curdir else prefix + os.sep
             for name in names:
-                out.append((prefix + name, os.path.getsize(os.path.join(r, name))))
-        return sorted(out)
+                files.append((prefix + name, os.path.getsize(os.path.join(r, name))))
+        return sorted(files), sorted(empty)
 
     def mkdirs(self, p: str) -> None:
         if p:
@@ -186,17 +193,23 @@ class ArrowFS:
         return self._info(p).size
 
     def walk_files_with_size(self, root: str) -> list[tuple]:
-        """Sorted ``(relative_path, size)`` — FileInfo already carries the
-        size, so one recursive listing RPC covers both."""
+        """The files half of ``walk_tree``."""
+        return self.walk_tree(root)[0]
+
+    def walk_tree(self, root: str) -> tuple[list[tuple], list[str]]:
+        """Sorted ``(relative_path, size)`` of every file and sorted
+        relative paths of the empty subdirectories — FileInfo already
+        carries the type and size, so one recursive listing RPC covers
+        both lists."""
         import pyarrow.fs as pafs
 
         fs, native = self._resolve(root)
         sel = pafs.FileSelector(native, recursive=True)
-        return sorted(
-            (posixpath.relpath(info.path, native), info.size)
-            for info in fs.get_file_info(sel)
-            if info.type == pafs.FileType.File
-        )
+        entries = [(posixpath.relpath(i.path, native), i) for i in fs.get_file_info(sel)]
+        files = [(rel, i.size) for rel, i in entries if i.type == pafs.FileType.File]
+        dirs = {rel for rel, i in entries if i.type == pafs.FileType.Directory}
+        nonempty = {posixpath.dirname(rel) for rel, _ in entries}
+        return sorted(files), sorted(dirs - nonempty)
 
     def mkdirs(self, p: str) -> None:
         fs, native = self._resolve(p)

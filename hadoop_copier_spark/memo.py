@@ -1,7 +1,7 @@
 """Registry of the package's cross-invocation memoized caches.
 
-Three modules memoize per-session state keyed by applicationId so
-repeated invocations within one session skip redundant jobs:
+Four modules memoize state so repeated invocations skip redundant jobs;
+three of them per session, keyed by applicationId:
 
 * ``queries.graph_ops._EDGE_CACHE`` — the shared localCheckpoint'ed
   co-purchase edge frame every graph operator filters (one basket
@@ -18,6 +18,13 @@ repeated invocations within one session skip redundant jobs:
   signal: a same-path rewrite produces new part-file names, the key
   changes, and the probe re-fires — no immutability assumption left.
 
+and one per process, shared by every session:
+
+* ``tables._SCHEMA_CACHE`` — the inferred schema of each parquet file
+  ``tables.read_parquet`` opened, per (path, footer digest, inference
+  confs); a hit opens the table with no schema-inference job. No query
+  family consumes it alone, so ``consumed_caches`` names none for it.
+
 Why a registry: a benchmark must know whether a measurement includes
 this memoized work. perfbench's ``memo.keys_built`` counter diffs
 snapshot_cache_keys() around each query to count the keys that query
@@ -31,6 +38,7 @@ from typing import Callable
 
 
 def _caches() -> dict[str, dict]:
+    from . import tables
     from .operators import similarity
     from .queries import graph_ops, tpch_analogs
 
@@ -38,6 +46,7 @@ def _caches() -> dict[str, dict]:
         "graph_edges": graph_ops._EDGE_CACHE,
         "tpch_probes": tpch_analogs._PROBE_CACHE,
         "hardneg_probe": similarity._HARDNEG_PROBE_CACHE,
+        "table_schemas": tables._SCHEMA_CACHE,
     }
 
 

@@ -1,16 +1,34 @@
 """Fixture-table loading (TESTDATA.md / FIXTURES.md).
 
-Tables are deterministic driver-generated parquet; we read them with footer
-schemas (no inference cost, exact types). ``register_views`` exposes them as
-temp views so SQL-form operators (GROUPING SETS, etc.) can run.
+Tables are deterministic generated parquet fixtures with exact footer types.
+``register_views`` exposes them as temp views so SQL-form operators
+(GROUPING SETS, etc.) can run.
+
+Inferring a parquet schema is one Spark job per read (a warm
+``spark.read.parquet`` of ``orders`` took about 90 ms on 4 cores, a read
+given the schema about 11 ms), so ``read_parquet`` memoizes the inferred
+schema per process in ``_SCHEMA_CACHE``, keyed by the path, a
+digest of the file's parquet footer and the session confs that inference
+reads. A table whose footer has been seen opens with no job; a rewritten
+footer or a changed conf is a new key and infers again. The footer is
+exactly what Spark reads to infer, so no file timestamp is consulted (a
+same-size rewrite within one clock tick keeps its mtime). DataFrames are
+not cached: two reads of one table stay distinct relations, as self-joins
+need.
 
 At 100 TB these reads become partitioned-table scans; nothing here assumes
-single-file inputs — ``spark.read.parquet`` takes directories identically.
+single-file inputs — ``spark.read.parquet`` takes directories identically
+(a directory has no single footer, so its schema is inferred every time).
 """
 
 from __future__ import annotations
 
+import hashlib
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
+
+from .fs import fs_for, scheme_of
 
 TABLES = [
     "region",
@@ -26,10 +44,73 @@ TABLES = [
 ]
 
 
+# Session confs that change what Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive",
+)
+
+# (path, footer digest, inference conf values) -> inferred StructType.
+# One entry per (path, confs): inserting a new footer's entry evicts the
+# old one, so the dict stays bounded by the files read.
+_SCHEMA_CACHE: dict = {}
+_SCHEMA_LOCK = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """``(path, footer digest, inference conf values)``, or None when
+    ``path`` is not one readable parquet file or Spark would not read the
+    bytes digested here (a bare path under a non-local ``fs.defaultFS``)."""
+    if scheme_of(path) is None:
+        default_fs = spark.conf.get("fs.defaultFS", None)
+        default_fs = default_fs or spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        if scheme_of(default_fs or "file://") != "file":
+            return None
+    try:
+        with fs_for(path).open_read(path) as f:
+            size = f.seek(0, 2)
+            if size < 12:
+                return None
+            f.seek(size - 8)
+            tail = f.read(8)
+            n = int.from_bytes(tail[:4], "little")
+            if tail[4:] != b"PAR1" or n > size - 12:
+                return None
+            f.seek(size - 8 - n)
+            footer = f.read(n)
+    except (OSError, ValueError):  # a directory, a missing or unreadable file
+        return None
+    digest = hashlib.blake2b(footer + tail, digest_size=16).digest()
+    return path, digest, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema of a given
+    footer under given inference confs once per process; later reads
+    pass the memoized schema and run no Spark job."""
+    key = _schema_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMA_LOCK:
+        for stale in [k for k in _SCHEMA_CACHE if k[0] == path and k[2] == key[2]]:
+            del _SCHEMA_CACHE[stale]
+        _SCHEMA_CACHE[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,12 +139,12 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType
 
     try:
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = read_parquet(spark, f"{sf_dir}/events.parquet")
     except Exception as e:  # foreign session + TIMESTAMP(NANOS) layout
         if "PARQUET_TYPE_ILLEGAL" not in str(e) and "illegal" not in str(e).lower():
             raise
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = read_parquet(spark, f"{sf_dir}/events.parquet")
     if isinstance(df.schema["ts"].dataType, LongType):
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))

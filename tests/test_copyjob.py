@@ -116,6 +116,30 @@ def test_empty_dir_checksum_false(spark, tree, tmp_path):
     assert st["items"][0]["bytesCopied"] == 0
 
 
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_nested_empty_directories_recreated(spark, tree, tmp_path, scheme):
+    """Every empty subdirectory, however deep and whether or not a sibling
+    holds files, exists at the destination (the reference's DFS makes
+    each directory it walks, HdfsCopyService.java:89); ``status()`` is
+    the plain directory copy's."""
+    src, files = tree
+    for rel in ("a/empty_leaf", "only_dirs/x/y", "only_dirs/z"):
+        (src / rel).mkdir(parents=True)
+    dst = tmp_path / "dst"
+    eng = CopyJobEngine(spark)
+    rid = eng.submit(CopyRequest("local", [CopyItem(scheme + str(src), scheme + str(dst))]))
+    st = eng.status(rid)
+    assert st["status"] == "COMPLETED"
+    assert st["items"][0]["checksumVerified"] is True
+    assert st["items"][0]["bytesCopied"] == sum(len(d) for d in files.values())
+
+    def dirs(root):
+        return sorted(os.path.relpath(r, root) for r, _, _ in os.walk(root))
+
+    assert dirs(dst) == dirs(src)
+    assert "only_dirs/x/y" in dirs(dst) and "empty_dir" in dirs(dst)
+
+
 def test_checksum_disabled_verified_false_not_error(spark, tree, tmp_path):
     src, _ = tree
     eng = CopyJobEngine(spark, checksum_enabled=False)

@@ -85,3 +85,22 @@ def test_both_layouts_agree_on_values(spark, dual_layout_dirs):
     ts = [r[1] for r in us_rows]
     assert ts[0].isoformat() == "2024-01-01T00:00:00"
     assert ts[1].isoformat() == "2024-01-01T00:00:07.179575"
+
+
+def test_rewrite_keeping_mtime_is_not_served_stale_schema(spark, tmp_path):
+    """A rewrite that keeps the old mtime (as a same-tick rewrite does)
+    still opens with the new file's schema and values: the key is the
+    footer, not the file's timestamp."""
+    base = str(tmp_path)
+    _write_fixture(base, pa.array(_TS_US, pa.timestamp("us")))
+    path = os.path.join(base, "events.parquet")
+    before = load_table(spark, base, "events").orderBy("event_id").collect()
+    st = os.stat(path)
+    shifted = [v + 1_000_000 for v in _TS_US]  # one second later
+    _write_fixture(base, pa.array([v * 1000 for v in shifted], pa.timestamp("ns")))
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+    after = load_table(spark, base, "events").orderBy("event_id").collect()
+    expected = [v // 1_000_000 for v in shifted]
+    assert [int(r["ts"].timestamp()) for r in after] == expected
+    assert [int(r["ts"].timestamp()) for r in before] == [v // 1_000_000 for v in _TS_US]

@@ -10,7 +10,7 @@ from hadoop_copier_spark.queries import REGISTRY, graph_ops, tpch_analogs
 
 def test_registry_names_every_known_cache():
     counts = clear_memoized_caches()
-    assert set(counts) == {"graph_edges", "tpch_probes", "hardneg_probe"}
+    assert set(counts) == {"graph_edges", "tpch_probes", "hardneg_probe", "table_schemas"}
 
 
 def test_clear_only_touches_named_cache():

@@ -7,13 +7,16 @@ scale factor, as the tests' ``sf_smoke`` and ``sf_oracle`` directories do.
 
 Starts the engine's session (``get_spark``, which takes its cores from
 ``SPARK_GRAFT_CPUS``), makes one cold call of each query, then three warm
-calls, each in its own Spark job group, and prints one line per call with
-the jobs, stages and tasks that ran under that group (read through
-``statusTracker``). A call is the query's function plus its action:
+calls, and prints one line per call with the jobs, stages and tasks that
+ran (read through ``statusTracker``). A call is the query's function (the
+build: table opens, eager probes and checkpoints) plus its action:
 ``toPandas()`` for hash-checked (H-class) queries, ``collect()`` for the
-others, as the benchmark runs them. Jobs that the query starts from a thread
-of its own are not in its group and are not counted. Stages and tasks count what ran: a stage whose shuffle output an
-earlier job left behind is skipped, and neither it nor its tasks count.
+others, as the benchmark runs them. Build and action each run in a Spark
+job group of their own, so their jobs print as separate columns; stages and
+tasks cover both. Jobs that the query starts from a thread of its own are
+not in its groups and are not counted. Stages and tasks count what ran: a
+stage whose shuffle output an earlier job left behind is skipped, and
+neither it nor its tasks count.
 """
 
 import argparse
@@ -45,11 +48,14 @@ def group_counts(sc, group: str) -> tuple[int, int, int]:
 
 
 def call(spark, q, sf: str, group: str) -> float:
+    """Run one call: the build under ``group-build``, the action under
+    ``group-action``. Returns its wall time."""
     sc = spark.sparkContext
-    sc.setJobGroup(group, q.name)
     t0 = time.perf_counter()
     try:
+        sc.setJobGroup(f"{group}-build", q.name)
         df = q.fn(spark, sf)
+        sc.setJobGroup(f"{group}-action", q.name)
         df.toPandas() if q.oracle else df.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -72,15 +78,17 @@ def main(argv=None) -> int:
     spark = get_spark(app_name="jobs-per-query")
     sc = spark.sparkContext
     print(f"# sf={args.sf} cores={sc.defaultParallelism} spark={spark.version}")
-    print("query\tcall\tjobs\tstages\ttasks\twall_s")
+    print("query\tcall\tbuild_jobs\taction_jobs\tstages\ttasks\twall_s")
     for name in names:
         q = REGISTRY[name]
         for i in range(WARM_CALLS + 1):
             group = f"jpq-{name}-{i}"
             wall = call(spark, q, args.sf, group)
-            jobs, stages, tasks = group_counts(sc, group)
+            build_jobs, build_stages, build_tasks = group_counts(sc, f"{group}-build")
+            action_jobs, action_stages, action_tasks = group_counts(sc, f"{group}-action")
             kind = "cold" if i == 0 else f"warm{i}"
-            print(f"{name}\t{kind}\t{jobs}\t{stages}\t{tasks}\t{wall:.2f}", flush=True)
+            print(f"{name}\t{kind}\t{build_jobs}\t{action_jobs}\t{build_stages + action_stages}"
+                  f"\t{build_tasks + action_tasks}\t{wall:.2f}", flush=True)
     spark.stop()
     return 0
 

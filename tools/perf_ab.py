@@ -9,7 +9,10 @@ Prints each run's metrics and ``window_cpu_steal``, then per metric each
 side's quartiles, the pairs HEAD won and the change of HEAD's median from
 BASE's. An end-to-end metric also shows its ``bound`` from BENCHMARK.json,
 and ``BREACH`` when HEAD's median is worse than BASE's by more than that
-bound (the no-regression rule). The detail line's per-class medians
+bound (the no-regression rule). Every metric shows whether the claim rule
+holds: HEAD wins at least nine tenths of the pairs and its median is better
+than BASE's by more than BASE's q3 - q1 (``claim met``, else ``claim not
+met``). The detail line's per-class medians
 (``op_p50_ms_by_type``: request class for copy_ingest, query for
 sql_analytics) get the same table as ``op_p50_ms[class]``, so a change that
 moves one class and leaves the others alone shows as such. Exits 1 if a
@@ -84,8 +87,12 @@ def main(argv=None) -> int:
             limit = ""
             if name in bound:
                 limit = f" (bound {bound[name]:.0%}{', BREACH' if worse > bound[name] else ''})"
+            b1, _, b3 = quartiles(b)
+            gain = statistics.median(b) - statistics.median(h)
+            gain = gain if direction == "lower" else -gain
+            claim = "met" if wins >= 0.9 * len(h) and gain > b3 - b1 else "not met"
             print(f"{name:12s} base q1/med/q3 -> head: {fmt}  head wins {wins}/{len(h)}"
-                  f"  median {change:+.1%}{limit}")
+                  f"  median {change:+.1%}{limit}  claim {claim}")
     print("steal base/head per pair: " + " ".join(
         f"{x['window_cpu_steal']:.3f}/{y['window_cpu_steal']:.3f}" for x, y in zip(runs["base"], runs["head"])))
     return 0 if all(r["correct"] for side in runs.values() for r in side) else 1

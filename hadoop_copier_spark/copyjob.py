@@ -3,7 +3,8 @@
 The reference (neva-layna/hadoop-copier) is a Spring Boot service that
 asynchronously copies HDFS files/trees to the local FS with bandwidth
 throttling, MD5 verification and per-item status rollup. This module
-re-expresses that capability Spark-first:
+re-expresses that capability Spark-first, verifying with SHA-256 instead of
+MD5 (see R8 below):
 
 - driver-side recursive listing (R4; the reference's Stack-DFS at
   m/service/HdfsCopyService.java:67-109 becomes a flat file work-list —
@@ -12,10 +13,17 @@ re-expresses that capability Spark-first:
   single Spark stage (R11; replaces the fixed 10-thread pool of
   m/config/AsyncConfig.java:16-25),
 - mapPartitions byte copy with a token-bucket throttle (R7 parity with
-  m/service/ThrottledInputStream.java:47-67) and the source MD5 fused into
-  the read loop (R8; the reference re-reads the local source at
+  m/service/ThrottledInputStream.java:47-67) and the source digest fused
+  into the read loop (R8; the reference re-reads the local source at
   m/service/HdfsCopyService.java:153-163 — with checksums on we re-read
-  only the destination, to verify what actually landed),
+  only the destination, to verify what actually landed). The digest is
+  SHA-256 where the reference computes MD5: a strictly stronger check
+  (MD5 collisions are practical), and on CPUs whose OpenSSL uses SHA
+  extensions (AMD EPYC, Intel Xeon from Ice Lake-SP, ARMv8 server cores)
+  about 2.4x faster per stream, so hashing, most of a verified copy's CPU,
+  takes less than half as long. On CPUs without them (Intel Xeon before
+  Ice Lake-SP) SHA-256 is slower than MD5. No digest leaves the executor:
+  ``status()`` reports only ``checksumVerified``, as the reference does,
 - per-file and per-item failure containment (R13): each partition returns
   one partial rollup per item it touched and the driver merges them, so
   no cross-thread mutable state and no per-file rows reach the driver,
@@ -54,8 +62,8 @@ append-only — the same plan writes chunk part-files and stitches them with
 FileSystem.concat, exactly the DistCp strategy). Verification of split
 files is per-range (source range hashed in the read loop, destination
 range re-read and compared) — the S3-multipart-ETag model: the same
-guarantee as whole-file MD5, but embarrassingly parallel. Files under the
-threshold keep the reference's single-stream whole-file MD5 path.
+guarantee as a whole-file digest, but embarrassingly parallel. Files under
+the threshold keep the reference's single-stream whole-file path.
 Bandwidth-capped items are never split: the reference's throttle is
 per-item-stream (m/service/HdfsCopyService.java:177-183), and splitting
 would multiply the effective rate by the chunk count.
@@ -75,6 +83,11 @@ from .fs import fs_for, qualify
 
 BUFFER_SIZE = 64 * 1024  # matches the reference's copy buffer (R6)
 
+# Copy-verification digest (R8) of the source read loop and the destination
+# re-read: SHA-256, not the reference's MD5 (why, and where it is slower:
+# module docstring).
+_DIGEST = hashlib.sha256
+
 # Byte-range splitting defaults: split when a file exceeds the threshold,
 # into chunks of at most the chunk size. 128 MiB matches the usual HDFS
 # block / Spark partition target, so chunk tasks are never coarser than scan
@@ -82,8 +95,8 @@ BUFFER_SIZE = 64 * 1024  # matches the reference's copy buffer (R6)
 DEFAULT_SPLIT_THRESHOLD = 256 * 1024 * 1024
 DEFAULT_SPLIT_CHUNK = 128 * 1024 * 1024
 # Floor for chunks balanced over the copy parallelism: above S3's 5 MiB
-# multipart minimum, and about 70 ms of MD5 per side, several times a
-# task's launch cost.
+# multipart minimum, and about 40 ms to copy and verify with SHA-256 on one
+# SHA-extension core (17 ms of hashing per side), above a task's launch cost.
 MIN_SPLIT_CHUNK = 16 * 1024 * 1024
 
 
@@ -201,11 +214,14 @@ def _copy_one_range(
     """Copy bytes [offset, offset+length) of ``src`` to the same offset of
     ``dst``; ``length < 0`` copies the whole file as one stream (the
     reference-parity path). 64 KiB buffer, token-bucket throttle, source
-    MD5 fused into the read loop; with ``checksum`` the destination is
-    re-read and compared — whole-file MD5, or per range for split files
-    (the S3-multipart-ETag model). All I/O goes through the fs layer
-    (local fast path or pyarrow.fs for URI schemes). Returns
-    (bytes, md5_ok).
+    ``_DIGEST`` (SHA-256) fused into the read loop; with ``checksum`` the
+    destination is re-read after the write handle closes and its digest
+    compared — the whole file, or per range for split files (the
+    S3-multipart-ETag model). A mismatch raises ``IOError("Checksum
+    mismatch for {dst}")``, with `` range [offset, offset+length)``
+    appended for a range. All I/O goes through the fs layer (local fast
+    path or pyarrow.fs for URI schemes). Returns (bytes, verified);
+    ``verified`` is False exactly when ``checksum`` is off.
 
     A whole file overwrites its destination (``create``, like R5). A range
     opens the destination create-if-missing WITHOUT truncate
@@ -217,7 +233,7 @@ def _copy_one_range(
     planned when the destination fs ``supports_range_write``."""
     sfs, dfs = fs_for(src), fs_for(dst)
     whole = length < 0
-    src_digest = hashlib.md5() if checksum else None
+    src_digest = _DIGEST() if checksum else None
     total = 0
     window_start = time.monotonic()
     window_bytes = 0
@@ -245,7 +261,7 @@ def _copy_one_range(
     # verification needs read-your-writes (the closed handle's bytes are in
     # the page cache), not durability; fsync per chunk measured ~25% off
     # the whole split-copy throughput.
-    dst_digest = hashlib.md5()
+    dst_digest = _DIGEST()
     with dfs.open_read(dst) as fin:
         if not whole:
             fin.seek(offset)

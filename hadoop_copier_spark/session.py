@@ -25,7 +25,8 @@ def get_spark(
 
     AQE is on (runtime coalesce + skew-join split), timezone pinned UTC so
     timestamp semantics match the DuckDB oracle, Arrow enabled for the
-    pandas-UDF fast path.
+    pandas-UDF fast path. The generated-code cache holds 1000 classes, so
+    a warm query compiles none.
 
     Python workers fork from ``_worker_daemon`` instead of
     ``pyspark.daemon``: before CPython 3.12 every task otherwise re-reads
@@ -55,6 +56,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "hadoop_copier_spark._worker_daemon")
+        # Generated-class cache: at the default 100 entries (4 LRU segments
+        # of 25) the SQL mix's 99 classes thrash it, and every warm pass
+        # compiles dozens of classes again; 1000 holds them all.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     conf = dict(extra_conf or {})
     path = conf.get("spark.executorEnv.PYTHONPATH")

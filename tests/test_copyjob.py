@@ -321,6 +321,58 @@ def test_range_copy_reassembles_any_file(tmp_path_factory, data, chunk):
         assert f.read() == data
 
 
+def _corrupt_read_back(monkeypatch, dst: str, flip_at: int) -> None:
+    """Route the copy job's fs lookups to a LocalFS whose reads of ``dst``
+    return its bytes with the one at ``flip_at`` flipped: the destination
+    holds the right bytes, but what the verification re-reads does not."""
+    import io
+
+    from hadoop_copier_spark import copyjob
+    from hadoop_copier_spark.fs import LocalFS
+
+    class FlipOnReadBack(LocalFS):
+        def open_read(self, p: str):
+            if p != dst:
+                return super().open_read(p)
+            with open(p, "rb") as f:
+                data = bytearray(f.read())
+            data[flip_at] ^= 0xFF
+            return io.BytesIO(bytes(data))
+
+    monkeypatch.setattr(copyjob, "fs_for", lambda path: FlipOnReadBack())
+
+
+def test_verification_catches_corrupt_whole_file(tmp_path, monkeypatch):
+    """R8: one flipped byte in what the destination reads back fails the
+    whole-file copy with the verbatim message."""
+    src, dst = str(tmp_path / "s.bin"), str(tmp_path / "d.bin")
+    data = os.urandom(200_000)
+    with open(src, "wb") as f:
+        f.write(data)
+    _corrupt_read_back(monkeypatch, dst, 150_000)
+    with pytest.raises(IOError) as err:
+        _copy_one_range(src, dst, 0, -1, checksum=True)
+    assert str(err.value) == f"Checksum mismatch for {dst}"
+    with open(dst, "rb") as f:
+        assert f.read() == data  # the write was right; only the read-back lies
+
+
+def test_verification_catches_corrupt_range(tmp_path, monkeypatch):
+    """R8 for split files: a flipped byte inside the range fails that range,
+    and the message names it."""
+    src, dst = str(tmp_path / "s.bin"), str(tmp_path / "d.bin")
+    data = os.urandom(300_000)
+    with open(src, "wb") as f:
+        f.write(data)
+    with open(dst, "wb") as f:
+        f.truncate(len(data))  # planner pre-sizing
+    offset, length = 65_536, 100_000
+    _corrupt_read_back(monkeypatch, dst, offset + length - 1)
+    with pytest.raises(IOError) as err:
+        _copy_one_range(src, dst, offset, length, checksum=True)
+    assert str(err.value) == f"Checksum mismatch for {dst} range [65536, 165536)"
+
+
 @pytest.fixture()
 def restore_hadoop_conf(spark):
     """The Spark session is shared across the suite: snapshot/restore the

@@ -117,3 +117,29 @@ def test_workers_import_daemon_from_any_working_directory(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.split("\n")[-2] == "[1, 2]"
+
+
+# The benchmark's sql_analytics mix: 99 distinct generated classes.
+SQL_MIX = ["q24", "q12", "q35", "q43", "q61", "xh_tpch_q3", "xh_tpch_q14"]
+
+
+def test_warm_sql_pass_compiles_no_generated_class(spark, sf_smoke):
+    """The codegen cache holds every class the SQL mix generates, so a
+    second pass over it compiles none (at Spark's default of 100 entries,
+    in 4 LRU segments of 25, a warm pass compiled 27 to 48 of them again,
+    depending on the session's shuffle partitions)."""
+    from hadoop_copier_spark.queries import REGISTRY
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = lambda: metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def run_pass() -> int:
+        before = compiled()
+        for name in SQL_MIX:
+            q = REGISTRY[name]
+            df = q.fn(spark, sf_smoke)
+            df.toPandas() if q.oracle else df.collect()
+        return compiled() - before
+
+    run_pass()
+    assert run_pass() == 0

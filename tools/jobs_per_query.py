@@ -1,4 +1,5 @@
-"""Spark jobs, stages and tasks per warm call of registry queries.
+"""Spark jobs, stages, tasks and code compiles per warm call of registry
+queries.
 
     SPARK_GRAFT_CPUS=4 python3 tools/jobs_per_query.py xh_kcore_peel,xp_pagerank --sf FIXTURE_DIR
 
@@ -6,17 +7,21 @@ FIXTURE_DIR holds the fixture tables (``lineitem.parquet`` and so on) of one
 scale factor, as the tests' ``sf_smoke`` and ``sf_oracle`` directories do.
 
 Starts the engine's session (``get_spark``, which takes its cores from
-``SPARK_GRAFT_CPUS``), makes one cold call of each query, then three warm
-calls, and prints one line per call with the jobs, stages and tasks that
-ran (read through ``statusTracker``). A call is the query's function (the
-build: table opens, eager probes and checkpoints) plus its action:
-``toPandas()`` for hash-checked (H-class) queries, ``collect()`` for the
-others, as the benchmark runs them. Build and action each run in a Spark
-job group of their own, so their jobs print as separate columns; stages and
-tasks cover both. Jobs that the query starts from a thread of its own are
+``SPARK_GRAFT_CPUS``), makes one cold round of calls, one per query in the
+order given, then three warm rounds, as the benchmark's passes run a mix,
+and prints one line per call with the jobs, stages and tasks that
+ran (read through ``statusTracker``) and the generated classes it compiled
+(the count of Spark's ``CodegenMetrics`` compilation timer). A call is the
+query's function (the build: table opens, eager probes and checkpoints)
+plus its action: ``toPandas()`` for hash-checked (H-class) queries,
+``collect()`` for the others, as the benchmark runs them. Build and action
+each run in a Spark job group of their own, so their jobs print as separate
+columns; stages and tasks cover both. Jobs that the query starts from a thread of its own are
 not in its groups and are not counted. Stages and tasks count what ran: a
 stage whose shuffle output an earlier job left behind is skipped, and
-neither it nor its tasks count.
+neither it nor its tasks count. Compiles count the whole call, from any
+thread: a warm call compiles none unless the codegen cache dropped some of
+its classes while the round ran the other queries.
 """
 
 import argparse
@@ -78,17 +83,21 @@ def main(argv=None) -> int:
     spark = get_spark(app_name="jobs-per-query")
     sc = spark.sparkContext
     print(f"# sf={args.sf} cores={sc.defaultParallelism} spark={spark.version}")
-    print("query\tcall\tbuild_jobs\taction_jobs\tstages\ttasks\twall_s")
-    for name in names:
-        q = REGISTRY[name]
-        for i in range(WARM_CALLS + 1):
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = lambda: codegen.METRIC_COMPILATION_TIME().getCount()
+    print("query\tcall\tbuild_jobs\taction_jobs\tstages\ttasks\tcompiles\twall_s")
+    for i in range(WARM_CALLS + 1):
+        for name in names:
+            q = REGISTRY[name]
             group = f"jpq-{name}-{i}"
+            before = compiled()
             wall = call(spark, q, args.sf, group)
+            compiles = compiled() - before
             build_jobs, build_stages, build_tasks = group_counts(sc, f"{group}-build")
             action_jobs, action_stages, action_tasks = group_counts(sc, f"{group}-action")
             kind = "cold" if i == 0 else f"warm{i}"
             print(f"{name}\t{kind}\t{build_jobs}\t{action_jobs}\t{build_stages + action_stages}"
-                  f"\t{build_tasks + action_tasks}\t{wall:.2f}", flush=True)
+                  f"\t{build_tasks + action_tasks}\t{compiles}\t{wall:.2f}", flush=True)
     spark.stop()
     return 0
 

@@ -1,22 +1,19 @@
 """Registry of the package's cross-invocation memoized caches.
 
-Four modules memoize state so repeated invocations skip redundant jobs;
-three of them per session, keyed by applicationId:
+Three modules memoize state so repeated invocations skip redundant jobs;
+two of them per session, keyed by applicationId:
 
 * ``queries.graph_ops._EDGE_CACHE`` — the shared localCheckpoint'ed
   co-purchase edge frame every graph operator filters (one basket
   pipeline per (session, sf_dir); ~2.6 s at sf0.1, fronted by the
   first graph-family query to run).
-* ``queries.tpch_analogs._PROBE_CACHE`` — byte-aware broadcast-probe
-  row counts per (session, sf_dir, site); each site's bounded count()
-  is fronted by the first query using that site.
-* ``operators.similarity._HARDNEG_PROBE_CACHE`` — the hard-negatives
+* ``operators.similarity._HARDNEG_SHAPE_CACHE`` — the hard-negatives
   query-side (n, dim) probe per (session, query-plan semanticHash,
-  input-files fingerprint). This cache's hit changes PATH SELECTION
-  (broadcast vs IVF), not just a hint, so since round 18 (VERDICT r17
-  #4) its key carries the sorted leaf input-file list as a data-version
-  signal: a same-path rewrite produces new part-file names, the key
-  changes, and the probe re-fires — no immutability assumption left.
+  input-files fingerprint). This cache's hit selects the PATH
+  (broadcast vs IVF), so since round 18 (VERDICT r17 #4) its key
+  carries the sorted leaf input-file list as a data-version signal: a
+  same-path rewrite produces new part-file names, the key changes, and
+  the probe re-fires — no immutability assumption left.
 
 and one per process, shared by every session:
 
@@ -40,12 +37,11 @@ from typing import Callable
 def _caches() -> dict[str, dict]:
     from . import tables
     from .operators import similarity
-    from .queries import graph_ops, tpch_analogs
+    from .queries import graph_ops
 
     return {
         "graph_edges": graph_ops._EDGE_CACHE,
-        "tpch_probes": tpch_analogs._PROBE_CACHE,
-        "hardneg_probe": similarity._HARDNEG_PROBE_CACHE,
+        "hardneg_probe": similarity._HARDNEG_SHAPE_CACHE,
         "table_schemas": tables._SCHEMA_CACHE,
     }
 
@@ -78,16 +74,13 @@ def consumed_caches(fn: Callable) -> tuple[str, ...]:
     """Which registered caches a registry query's ``fn`` populates.
 
     Resolution is by module: every ``queries.graph_ops`` query filters
-    the shared edge frame; every ``queries.tpch_analogs`` query may hit
-    a broadcast-probe site; ``xh_hard_negatives`` (queries.llm_ops) is
+    the shared edge frame; ``xh_hard_negatives`` (queries.llm_ops) is
     the sole hardneg-probe consumer. Used by perfbench's ``memo.hits``
     counter to tell cache-consuming queries from the rest.
     """
     mod = getattr(fn, "__module__", "") or ""
     if mod.endswith("queries.graph_ops"):
         return ("graph_edges",)
-    if mod.endswith("queries.tpch_analogs"):
-        return ("tpch_probes",)
     if getattr(fn, "__name__", "") == "xh_hard_negatives":
         return ("hardneg_probe",)
     return ()

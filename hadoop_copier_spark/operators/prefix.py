@@ -31,6 +31,28 @@ from pyspark.sql import functions as F
 __all__ = ["global_prefix_sum", "grouped_rank"]
 
 
+def _range_stamp(df: DataFrame, order_cols: list) -> DataFrame:
+    """Steps 1-2 of the module plan: ``df`` range-repartitioned on
+    ``order_cols`` into ``spark.sql.shuffle.partitions`` partitions, sorted
+    within each, plus an int ``__pid`` and a long ``__lidx`` (the row's
+    0-based index inside its partition).
+
+    The checkpoint is lazy (r18): the caller's first job over the result
+    must be its per-partition aggregate collect, which materializes the
+    checkpoint and so pins the sampled range boundaries for every later
+    job exactly as an eager checkpoint would, one job cheaper."""
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    return (
+        df.repartitionByRange(n_parts, *order_cols)
+        .sortWithinPartitions(*order_cols)
+        .withColumn("__mid", F.monotonically_increasing_id())
+        .withColumn("__pid", F.shiftright(F.col("__mid"), 33).cast("int"))
+        .withColumn("__lidx", F.col("__mid") % F.lit(1 << 33))
+        .drop("__mid")
+        .localCheckpoint(eager=False)
+    )
+
+
 def global_prefix_sum(
     df: DataFrame,
     value_col: str | Column,
@@ -48,24 +70,8 @@ def global_prefix_sum(
     already collects add up to the corpus total, so a caller that needs
     it (budget thresholds, ppm denominators) reads it here for FREE
     instead of running its own full-scan aggregate job."""
-    spark = df.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     v = F.col(value_col) if isinstance(value_col, str) else value_col
-    base = df.withColumn("__psv", v.cast("long"))
-    parted = base.repartitionByRange(n_parts, *order_cols).sortWithinPartitions(
-        *order_cols
-    )
-    # lazy checkpoint (r18): the psums collect right below is the FIRST
-    # job over this frame — it materializes the checkpoint, which pins
-    # the sampled range boundaries for every later job exactly as the
-    # old eager spelling did, one job cheaper.
-    idx = (
-        parted.withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn("__pid", F.shiftright(F.col("__mid"), 33).cast("int"))
-        .withColumn("__lidx", F.col("__mid") % F.lit(1 << 33))
-        .drop("__mid")
-        .localCheckpoint(eager=False)
-    )
+    idx = _range_stamp(df.withColumn("__psv", v.cast("long")), order_cols)
     psums = sorted(
         (r["__pid"], r["s"] or 0)
         for r in idx.groupBy("__pid").agg(F.sum("__psv").alias("s")).collect()
@@ -111,19 +117,7 @@ def grouped_rank(
     where per-group EXACT ranks make sense anyway. Output row order is
     unspecified."""
     spark = df.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    keys = [*group_cols, *order_cols]
-    parted = df.repartitionByRange(n_parts, *keys).sortWithinPartitions(*keys)
-    # lazy checkpoint (r18): materialized — and the sampled range
-    # boundaries pinned — by the counts collect below (see
-    # global_prefix_sum), one job cheaper than the eager spelling
-    idx = (
-        parted.withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn("__pid", F.shiftright(F.col("__mid"), 33).cast("int"))
-        .withColumn("__lidx", F.col("__mid") % F.lit(1 << 33))
-        .drop("__mid")
-        .localCheckpoint(eager=False)
-    )
+    idx = _range_stamp(df, [*group_cols, *order_cols])
     counts = sorted(
         (
             (tuple(r[g] for g in group_cols), r["__pid"], r["n"])

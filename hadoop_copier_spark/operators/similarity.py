@@ -151,22 +151,18 @@ def lsh_ann_topk(
     def bucket_keys(vec: Column) -> Column:
         return bucket_keys_udf(vec)
 
-    def _dbl_dot2(a: Column, b: Column) -> Column:
-        prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-        return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
     # vectors+norms once per side; bucket keys on slim id-only frames so the
     # collision join and the dedup distinct never carry 64-float arrays
     # (distinct over the vectors measurably dominated the runtime).
     c0 = candidates.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cvec"),
-        _dbl_dot2(F.col(vec_col), F.col(vec_col)).alias("__cn2"),
+        _dbl_dot(F.col(vec_col), F.col(vec_col)).alias("__cn2"),
     )
     q0 = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
-        _dbl_dot2(F.col(vec_col), F.col(vec_col)).alias("__qn2"),
+        _dbl_dot(F.col(vec_col), F.col(vec_col)).alias("__qn2"),
     )
     ckeys = candidates.select(
         F.col(id_col).alias("neighbor_id"),
@@ -187,7 +183,7 @@ def lsh_ann_topk(
     pairs = pair_ids.join(c0, "neighbor_id").join(F.broadcast(q0), "query_id")
     # double cosine: array-order evaluation => deterministic within Spark;
     # cross-engine exactness is not required for the approximate path.
-    cos = _dbl_dot2(F.col("__qvec"), F.col("__cvec")) / F.sqrt(F.col("__qn2") * F.col("__cn2"))
+    cos = _dbl_dot(F.col("__qvec"), F.col("__cvec")) / F.sqrt(F.col("__qn2") * F.col("__cn2"))
     w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id"))
     return (
         pairs.select("query_id", "neighbor_id", cos.alias("__cos"))
@@ -860,29 +856,28 @@ def ivfpq_ann_topk(
     )
 
 
-# Query-side broadcast bound for hard_negatives_topk — the
-# _PART_BROADCAST_MAX_BYTES discipline (queries/tpch_analogs.py) applied
-# to the one frame this operator ships to every executor.
+# Query-side broadcast bound for hard_negatives_topk: the most bytes of
+# query vectors this operator ships to every executor on its exact path.
 _HARDNEG_BROADCAST_MAX_BYTES = 64 << 20
 
 # (applicationId, queries-plan semanticHash, vec_col, input-files
 # fingerprint) -> (n, dim). The probe is one bounded agg job (~0.4 s at
 # sf0.1 — real money when a session scores the same query set
-# repeatedly), memoized with the _PROBE_CACHE discipline: semanticHash
-# and inputFiles() are driver-side JVM calls on the analyzed plan, no
-# job; dead-session keys evict on insert.
+# repeatedly), so it is memoized per session: semanticHash and
+# inputFiles() are driver-side JVM calls on the analyzed plan, no job;
+# dead-session keys evict on insert.
 #
-# Unlike the broadcast-HINT probes, a hit here selects the PATH (exact
-# broadcast vs approximate IVF), so the key carries a DATA-VERSION
-# signal beyond the plan hash (VERDICT r17 #4, closing ADVICE r16): the
-# sorted tuple of the plan's leaf input files. A mid-session rewrite of
-# the same path produces new part-file names (parquet writers always
-# fresh-name parts), so the fingerprint changes and the probe re-fires
-# even though the plan — and therefore semanticHash — is identical;
-# pinned by test_hardneg_probe_refires_on_input_rewrite. Frames with no
+# A hit here selects the PATH (exact broadcast vs approximate IVF), so
+# the key carries a DATA-VERSION signal beyond the plan hash (VERDICT
+# r17 #4, closing ADVICE r16): the sorted tuple of the plan's leaf input
+# files. A mid-session rewrite of the same path produces new part-file
+# names (parquet writers always fresh-name parts), so the fingerprint
+# changes and the probe re-fires even though the plan — and therefore
+# semanticHash — is identical; pinned by
+# test_hardneg_probe_refires_on_input_rewrite. Frames with no
 # file lineage (local createDataFrame) fingerprint as () and rely on
 # semanticHash alone, as before.
-_HARDNEG_PROBE_CACHE: dict = {}
+_HARDNEG_SHAPE_CACHE: dict = {}
 
 
 def hard_negatives_topk(
@@ -903,11 +898,10 @@ def hard_negatives_topk(
     discipline (int_dot / int_norm2, 1e-6 quantized) on BOTH paths, so
     the broadcast path is bit-identical to the DuckDB oracle twin.
 
-    Path choice is a byte-aware PROBE, not an assumption (the
-    _PART_BROADCAST_MAX_BYTES discipline): the query side costs one
-    bounded count() plus a first() for the dim, and its estimated
-    serialized size (n_queries x (dim x 8 bytes + 96 overhead)) is
-    compared against ``max_broadcast_bytes``:
+    Path choice is a byte-aware PROBE, not an assumption: the query
+    side costs one bounded count() plus a first() for the dim, and its
+    estimated serialized size (n_queries x (dim x 8 bytes + 96
+    overhead)) is compared against ``max_broadcast_bytes``:
 
     * under the bound — the q59 shape: queries BROADCAST with their
       norms and labels; candidates stream map-side through the
@@ -948,16 +942,16 @@ def hard_negatives_topk(
     # (new part-file names) re-fires it
     app = queries.sparkSession.sparkContext.applicationId
     key = (app, queries.semanticHash(), vec_col, tuple(sorted(queries.inputFiles())))
-    hit = _HARDNEG_PROBE_CACHE.get(key)
+    hit = _HARDNEG_SHAPE_CACHE.get(key)
     if hit is None:
-        for stale in [k for k in _HARDNEG_PROBE_CACHE if k[0] != app]:
-            del _HARDNEG_PROBE_CACHE[stale]
+        for stale in [k for k in _HARDNEG_SHAPE_CACHE if k[0] != app]:
+            del _HARDNEG_SHAPE_CACHE[stale]
         row = queries.agg(
             F.count(F.lit(1)).alias("n"),
             F.first(F.size(F.col(vec_col))).alias("d"),
         ).first()
         hit = (int(row["n"]), int(row["d"] or 0))
-        _HARDNEG_PROBE_CACHE[key] = hit
+        _HARDNEG_SHAPE_CACHE[key] = hit
     n_q, dim_q = hit
     if not n_q:  # no queries: contract-schema empty result
         return candidates.sparkSession.createDataFrame(

@@ -29,73 +29,6 @@ from .registry import register
 
 _REV_SQL = f"SUM({ocents('l_extendedprice')} * (100 - {ocents('l_discount')}))"
 
-# TPC-H `part` is SF-PROPORTIONAL (200k x SF: ~20M rows at sf100), NOT a
-# fixed catalog like region/nation — the r13 verdict's one scale-weak mark
-# was q14 force-broadcasting it. Every part-derived build side in this
-# module therefore goes through the probe below: the hint is applied only
-# when the (already filtered/projected) slice ACTUALLY clears a BYTE
-# bound (VERDICT r14 / ADVICE: a flat 2M-row bound let a 3-column slice
-# reach ~100 MB); past it the join runs UNHINTED and AQE picks the
-# strategy from runtime sizes. The probed count is MEMOIZED per
-# (applicationId, sf_dir, site) — the _EDGE_CACHE discipline
-# (graph_ops.py) applied to the probe — so repeated invocations of
-# q14/q17/q19/... in one session pay exactly ONE probe job per site
-# instead of a fresh dimension-slice scan per call (at 100 TB that scan
-# is a real job per query submission). Growth law per site, adjudicated
-# in tests/test_plans.py: every probed frame grows with the PART CATALOG
-# (linear in SF), never with the corpus' fact tables.
-_PART_BROADCAST_MAX_BYTES = 64 << 20  # executor-memory-safe build side
-
-# Conservative serialized per-field widths for the byte estimate. Part
-# attribute strings (p_type <= 25 chars, p_brand 10) round up to 32.
-_FIELD_BYTES = {
-    "boolean": 1, "byte": 1, "short": 2, "integer": 4, "float": 4,
-    "date": 4, "long": 8, "double": 8, "timestamp": 8, "decimal": 16,
-}
-
-
-def _est_row_bytes(schema) -> int:
-    return max(
-        sum(_FIELD_BYTES.get(f.dataType.typeName(), 32) for f in schema.fields),
-        1,
-    )
-
-
-def _max_broadcast_rows(schema) -> int:
-    """Effective row bound for a slice of this width (byte-aware; a wide
-    slice earns a proportionally smaller row budget)."""
-    return _PART_BROADCAST_MAX_BYTES // _est_row_bytes(schema)
-
-
-# (applicationId, sf_dir, site) -> probed row count. Sessions get fresh
-# applicationIds, so a new session re-probes; within a session the count
-# of an immutable fixture slice cannot change.
-_PROBE_CACHE: dict = {}
-_PROBE_JOBS = 0  # number of ACTUAL probe count() jobs run (test pin)
-
-
-def _probed_broadcast(df, sf_dir, site):
-    """Broadcast-hint ``df`` only if probed_rows x est_row_bytes clears
-    ``_PART_BROADCAST_MAX_BYTES``; otherwise return it unhinted so AQE
-    decides from runtime sizes (VERDICT r13 #3). The probe count is
-    memoized per (applicationId, sf_dir, site) (VERDICT r14 #4)."""
-    global _PROBE_JOBS
-    app = df.sparkSession.sparkContext.applicationId
-    key = (app, sf_dir, site)
-    n = _PROBE_CACHE.get(key)
-    if n is None:
-        # ADVICE r15: entries keyed by dead applicationIds can't collide
-        # but would accumulate across session restarts in a long-lived
-        # process — evict them on insert so the cache stays one-session.
-        for stale in [k for k in _PROBE_CACHE if k[0] != app]:
-            del _PROBE_CACHE[stale]
-        n = df.count()
-        _PROBE_JOBS += 1
-        _PROBE_CACHE[key] = n
-    if n <= _max_broadcast_rows(df.schema):
-        return F.broadcast(df)
-    return df
-
 
 def _rev_e4():
     return (
@@ -339,11 +272,11 @@ def xh_tpch_q14(spark, sf_dir):
     DECIMAL(38,0)) and the ratio is integer ppm via truncating division
     on the exact sums — no floats anywhere, unlike the spec's 100.00*.
 
-    Plan at 100 TB: part is SF-PROPORTIONAL, so only the 2-column
-    (p_partkey, p_type) projection is ever a broadcast candidate, and
-    the hint is ROW-COUNT-PROBED (_probed_broadcast, VERDICT r13 #3) —
-    past the bound the join runs unhinted and AQE decides; lineitem's
-    only exchange is the bounded month rollup (partial->final on
+    Plan at 100 TB: part is SF-PROPORTIONAL, so the join is unhinted:
+    Spark broadcasts the 2-column (p_partkey, p_type) projection while
+    its estimated size is under the broadcast threshold, and past it AQE
+    picks the strategy from the measured size; lineitem's only exchange
+    is the bounded month rollup (partial->final on
     ~date-range/30 groups); the scan reads exactly the five columns the
     query needs (column pruning pins ReadSchema)."""
     li = tbl(spark, sf_dir, "lineitem")
@@ -355,10 +288,7 @@ def xh_tpch_q14(spark, sf_dir):
         F.lit(0).cast("decimal(38,0)")
     )
     return (
-        li.join(
-            _probed_broadcast(p.select("p_partkey", "p_type"), sf_dir, "q14"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
+        li.join(p.select("p_partkey", "p_type"), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.date_trunc("month", "l_shipdate").alias("__m"))
         .agg(
             F.sum(promo).cast("bigint").alias("promo_rev_e4"),
@@ -465,10 +395,18 @@ def xh_tpch_q19(spark, sf_dir):
     size/quantity axes (no container column; shipmode is absent), and
     money follows the exact-integer revenue discipline.
 
-    Plan: part pre-filters to the brand/size union then BROADCASTS;
-    lineitem's quantity caps evaluate post-join (they reference both
-    sides through the OR); output is a single partial->final global
-    aggregate row."""
+    Plan: part pre-filters to the brand/size union (6 % of the fixture's
+    part rows) and the join is unhinted, so Spark broadcasts that slice
+    while it is small and AQE decides from its measured size past that,
+    as for every part join in this module. Scale trade: at sf100 (20M
+    part rows) this slice (~1.2M rows of 6 columns) is past a 64 MiB
+    broadcast budget anyway, but the filtered key slices of q8, q9, q17
+    and q20 (0.8M-3.3M rows, 6-53 MB) are under it: a hint would keep
+    lineitem unshuffled there, while AQE broadcasts a slice only under
+    its 10 MB threshold, so at that scale those four shuffle lineitem
+    instead (SCALE.md). lineitem's quantity caps evaluate post-join
+    (they reference both sides through the OR); output is a single
+    partial->final global aggregate row."""
     li = tbl(spark, sf_dir, "lineitem")
     p = tbl(spark, sf_dir, "part")
     part_union = None
@@ -482,7 +420,7 @@ def xh_tpch_q19(spark, sf_dir):
         part_union = pu if part_union is None else (part_union | pu)
         full = arm if full is None else (full | arm)
     return (
-        li.join(_probed_broadcast(p.filter(part_union), sf_dir, "q19"), li.l_partkey == p.p_partkey)
+        li.join(p.filter(part_union), li.l_partkey == p.p_partkey)
         .filter(full)
         .agg(
             _rev_e4(),
@@ -988,15 +926,16 @@ def xh_tpch_q17(spark, sf_dir):
     fixture has no p_container, so the brand filter alone slices the
     catalog (declared adaptation).
 
-    Plan at 100 TB: the brand filter pushes into the part scan and that
-    small dimension broadcasts into lineitem; the per-part (sum, count)
+    Plan at 100 TB: the brand filter pushes into the part scan and the
+    unhinted join broadcasts that slice into lineitem while its measured
+    size allows (AQE decides); the per-part (sum, count)
     frame is ONE partial agg over the already-brand-sliced rows joined
     back part-keyed (never a correlated rescan per row, which is how
     the spec's subquery dies at scale); the final sum is a global
     partial->final pair."""
     p = tbl(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
     li = tbl(spark, sf_dir, "lineitem").join(
-        _probed_broadcast(p.select("p_partkey"), sf_dir, "q17"),
+        p.select("p_partkey"),
         F.col("l_partkey") == F.col("p_partkey"),
     )
     pq = li.groupBy("l_partkey").agg(
@@ -1049,10 +988,10 @@ def xh_tpch_q8(spark, sf_dir):
 
     Plan at 100 TB: region/nation filters collapse the customer
     dimension snowflake BEFORE the fact joins; part's type filter
-    pushes into its scan and that dimension broadcasts; supplier and
-    customer joins are key-partitioned and unhinted (both grow with
-    SF); lineitem ⋈ orders is the one fact-fact shuffle; the rollup is
-    years-bounded."""
+    pushes into its scan and its join is unhinted (AQE broadcasts the
+    slice while it is small); supplier and customer joins are
+    key-partitioned and unhinted (both grow with SF); lineitem ⋈
+    orders is the one fact-fact shuffle; the rollup is years-bounded."""
     li = tbl(spark, sf_dir, "lineitem")
     p = tbl(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
     o = tbl(spark, sf_dir, "orders")
@@ -1073,7 +1012,7 @@ def xh_tpch_q8(spark, sf_dir):
         F.lit(0).cast("decimal(38,0)")
     )
     return (
-        li.join(_probed_broadcast(p.select("p_partkey"), sf_dir, "q8"), li.l_partkey == p.p_partkey)
+        li.join(p.select("p_partkey"), li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)  # unhinted: AQE decides
         .join(F.broadcast(nc), c.c_nationkey == F.col("cn_key"))
@@ -1126,9 +1065,10 @@ def xh_tpch_q9(spark, sf_dir):
     accumulated in DECIMAL(38,0), emitted BIGINT.
 
     Plan at 100 TB: the type filter pushes into the part scan and the
-    surviving keys+prices broadcast; supplier is key-partitioned
-    unhinted; nation broadcasts; lineitem ⋈ orders is the one
-    fact-fact shuffle; the rollup is (nations x years)-bounded."""
+    surviving keys+prices join unhinted (AQE broadcasts them while they
+    are small); supplier is key-partitioned unhinted; nation
+    broadcasts; lineitem ⋈ orders is the one fact-fact shuffle; the
+    rollup is (nations x years)-bounded."""
     li = tbl(spark, sf_dir, "lineitem")
     p = tbl(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
     s = tbl(spark, sf_dir, "supplier")
@@ -1139,10 +1079,7 @@ def xh_tpch_q9(spark, sf_dir):
         - cents("p_retailprice") * cents("l_quantity")
     ).cast("decimal(38,0)")
     return (
-        li.join(
-            _probed_broadcast(p.select("p_partkey", "p_retailprice"), sf_dir, "q9"),
-            li.l_partkey == p.p_partkey,
-        )
+        li.join(p.select("p_partkey", "p_retailprice"), li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)  # unhinted: AQE decides
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(o, li.l_orderkey == o.o_orderkey)
@@ -1281,10 +1218,7 @@ def xh_tpch_q11(spark, sf_dir):
     v = (
         li.join(s, li.l_suppkey == s.s_suppkey)  # unhinted: AQE decides
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(
-            _probed_broadcast(p.select("p_partkey", "p_retailprice"), sf_dir, "q11"),
-            li.l_partkey == F.col("p_partkey"),
-        )
+        .join(p.select("p_partkey", "p_retailprice"), li.l_partkey == F.col("p_partkey"))
         .groupBy("l_partkey")
         .agg(
             F.sum(
@@ -1339,16 +1273,16 @@ def xh_tpch_q20(spark, sf_dir):
     SEMI-joins into the supplier dimension. The half test is
     cross-multiplied (qty x 2 > total) on exact centi-quantities.
 
-    Plan at 100 TB: the type filter prunes part and that key set
-    broadcasts; the (supplier, part) and per-part aggregates are two
-    uniform partial aggs over the SAME filtered frame (checkpointed
-    once); the dominance probe is a part-keyed equi join of two
-    aggregate frames (never a rescan); the final membership test is a
-    LEFT SEMI into supplier."""
+    Plan at 100 TB: the type filter prunes part and that key set joins
+    unhinted (AQE broadcasts it while it is small); the (supplier,
+    part) and per-part aggregates are two uniform partial aggs over the
+    SAME filtered frame (checkpointed once); the dominance probe is a
+    part-keyed equi join of two aggregate frames (never a rescan); the
+    final membership test is a LEFT SEMI into supplier."""
     li = tbl(spark, sf_dir, "lineitem")
     p = tbl(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     sp = (
-        li.join(_probed_broadcast(p.select("p_partkey"), sf_dir, "q20"), li.l_partkey == F.col("p_partkey"))
+        li.join(p.select("p_partkey"), li.l_partkey == F.col("p_partkey"))
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(cents("l_quantity")).cast("long").alias("qty_c"))
         .localCheckpoint(eager=True)  # feeds the per-part total AND the probe
@@ -1477,9 +1411,10 @@ def xh_tpch_q2(spark, sf_dir):
     construction) — the same composite-min trick both engines compute
     identically; ties on balance resolve to the lowest suppkey.
 
-    Plan at 100 TB: size/type filters prune part to a broadcastable
-    slice; region/nation collapse the supplier snowflake; the
-    (part, supplier) relation is one DISTINCT exchange; the per-part
+    Plan at 100 TB: size/type filters prune part to a slice that joins
+    unhinted (AQE broadcasts it while it is small); region/nation
+    collapse the supplier snowflake; the (part, supplier) relation is
+    one DISTINCT exchange; the per-part
     MIN is a uniform partial agg joined back part-keyed (never a
     correlated rescan); top-100 is TakeOrderedAndProject."""
     li = tbl(spark, sf_dir, "lineitem")
@@ -1494,10 +1429,7 @@ def xh_tpch_q2(spark, sf_dir):
         "n_nationkey", "n_name"
     )
     cand = (
-        ps.join(
-            _probed_broadcast(p.select("p_partkey", "p_type", "p_size"), sf_dir, "q2"),
-            ps.l_partkey == F.col("p_partkey"),
-        )
+        ps.join(p.select("p_partkey", "p_type", "p_size"), ps.l_partkey == F.col("p_partkey"))
         .join(s, ps.l_suppkey == s.s_suppkey)  # unhinted: AQE decides
         .join(F.broadcast(nr), F.col("s_nationkey") == F.col("n_nationkey"))
         .select(

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window as W
 
+from ..operators.prefix import _range_stamp
 from .base import F, cents, dec, ocents, odec, tbl
 from .registry import register
 
@@ -81,9 +82,11 @@ def xh_ntile_scalable(spark, sf_dir):
        id in the upper bits, a consecutive per-partition counter in the
        lower 33, which is exactly (pid, lidx) for free (the r1-r4 form
        paid a whole-table Arrow mapInPandas round-trip for the same two
-       columns — ~2x the query's wall at sf0.1). localCheckpoint pins the
-       sampled, RDD-id-seeded range boundaries so both downstream jobs
-       see the SAME partitioning;
+       columns — ~2x the query's wall at sf0.1). Steps 1-2 are
+       operators.prefix._range_stamp, shared with global_prefix_sum and
+       grouped_rank: its lazy localCheckpoint, materialized by the counts
+       collect, pins the sampled, RDD-id-seeded range boundaries so both
+       downstream jobs see the SAME partitioning;
     3. per-partition counts (<= P rows, driver metadata) -> cumulative
        offsets -> global rank = offset[pid] + local_index + 1;
     4. ntile/percent_rank/cume_dist become pure expressions of (rank, n) —
@@ -95,35 +98,22 @@ def xh_ntile_scalable(spark, sf_dir):
 
 
 def _ntile_scalable(spark, sf_dir):
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    parted = o.repartitionByRange(n_parts, "o_totalprice", "o_orderkey").sortWithinPartitions(
-        "o_totalprice", "o_orderkey"
-    )
-
-    idx = (
-        parted.withColumn("mid", F.monotonically_increasing_id())
-        .select(
-            "o_orderkey",
-            "o_totalprice",
-            F.shiftright(F.col("mid"), 33).cast("int").alias("pid"),
-            (F.col("mid") % F.lit(1 << 33)).alias("lidx"),
-        )
-        .localCheckpoint()  # pin the sampled range boundaries across jobs
-    )
+    idx = _range_stamp(o, ["o_totalprice", "o_orderkey"])
 
     counts = sorted(
-        (r["pid"], r["n"]) for r in idx.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    )  # <= n_parts rows: metadata, not data
+        (r["__pid"], r["n"])
+        for r in idx.groupBy("__pid").agg(F.count(F.lit(1)).alias("n")).collect()
+    )  # <= shuffle-partitions rows: metadata, not data
     n = sum(c for _, c in counts)
     offsets, acc = {}, 0
     for pid, c in counts:
         offsets[pid] = acc
         acc += c
     off_expr = F.element_at(
-        F.create_map(*[F.lit(x) for pc in offsets.items() for x in pc]), F.col("pid")
+        F.create_map(*[F.lit(x) for pc in offsets.items() for x in pc]), F.col("__pid")
     )
-    rank = (off_expr + F.col("lidx") + 1).alias("rank")
+    rank = (off_expr + F.col("__lidx") + 1).alias("rank")
 
     # Spark/DuckDB ntile bucket layout: first n%k buckets get ceil(n/k) rows
     k = 10

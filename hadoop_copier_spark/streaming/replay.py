@@ -31,19 +31,16 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def replay_events_chunks(
-    spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 5
-) -> list[str]:
-    """Write events (ts-ordered) as n_chunks parquet directories; returns
-    the chunk paths in replay order. Chunking is by row_number ranges, so
-    the split is deterministic."""
+def _write_row_chunks(df, out_dir: str, n_chunks: int) -> list[str]:
+    """Write ``df`` (ts-ordered) as ``n_chunks`` single-file parquet
+    directories ``out_dir/chunk_000`` ...; returns them in replay order.
+    Chunking is by row_number ranges over one unpartitioned window, so the
+    split is exact and deterministic (test scale)."""
     from pyspark.sql import Window as W
 
-    e = load_table(spark, sf_dir, "events")
-    n = e.count()
+    n = df.count()
     per = (n + n_chunks - 1) // n_chunks
-    w = W.orderBy("ts", "event_id")
-    ranked = e.withColumn("__rn", F.row_number().over(w))
+    ranked = df.withColumn("__rn", F.row_number().over(W.orderBy("ts", "event_id")))
     paths = []
     for i in range(n_chunks):
         path = os.path.join(out_dir, f"chunk_{i:03d}")
@@ -58,6 +55,44 @@ def replay_events_chunks(
     return paths
 
 
+def _with_time_bucket(spark: SparkSession, sf_dir: str, n_chunks: int):
+    """The events table plus an int ``chunk`` column: its bucket among
+    ``n_chunks`` approximately-equal time ranges, cut at approxQuantile
+    points of the event second (one bounded stats job, no sort)."""
+    e = load_table(spark, sf_dir, "events").withColumn(
+        "__sec", F.unix_timestamp("ts")
+    )
+    cuts = e.stat.approxQuantile(
+        "__sec", [i / n_chunks for i in range(1, n_chunks)], 0.001
+    )
+    bucket = F.lit(0)
+    for c in cuts:
+        bucket = bucket + (F.col("__sec") > F.lit(c)).cast("int")
+    return e.withColumn("chunk", bucket).drop("__sec")
+
+
+def _stamp_chunk_mtimes(base_dir: str, n_chunks: int, t0: float) -> None:
+    """Set every file under ``base_dir/chunk=i`` to mtime ``t0 + i``: the
+    file source orders new files by modification time, so this makes the
+    replay order the chunk order. An empty time bucket writes no
+    directory and is skipped."""
+    for i in range(n_chunks):
+        chunk_dir = os.path.join(base_dir, f"chunk={i}")
+        if not os.path.isdir(chunk_dir):
+            continue
+        for name in os.listdir(chunk_dir):
+            os.utime(os.path.join(chunk_dir, name), (t0 + i, t0 + i))
+
+
+def replay_events_chunks(
+    spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 5
+) -> list[str]:
+    """Write events (ts-ordered) as n_chunks parquet directories; returns
+    the chunk paths in replay order. Chunking is by row_number ranges, so
+    the split is deterministic."""
+    return _write_row_chunks(load_table(spark, sf_dir, "events"), out_dir, n_chunks)
+
+
 def replay_events_split(
     spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 3
 ) -> tuple[str, str]:
@@ -69,29 +104,12 @@ def replay_events_split(
     event time together and the join's watermark state stays bounded while
     replaying. Test-scale writer (single-partition row_number window);
     the 100 TB replay path is replay_events_time_buckets."""
-    from pyspark.sql import Window as W
-
     e = load_table(spark, sf_dir, "events")
-    dirs = []
-    for side, keep_even in (("left", True), ("right", False)):
-        side_dir = os.path.join(out_dir, side)
-        parity = (F.col("event_id") % 2 == 0) if keep_even else (F.col("event_id") % 2 != 0)
-        sub = e.filter(parity)
-        n = sub.count()
-        per = (n + n_chunks - 1) // n_chunks
-        ranked = sub.withColumn("__rn", F.row_number().over(W.orderBy("ts", "event_id")))
-        for i in range(n_chunks):
-            (
-                ranked.filter(
-                    (F.col("__rn") > i * per) & (F.col("__rn") <= (i + 1) * per)
-                )
-                .drop("__rn")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(side_dir, f"chunk_{i:03d}"))
-            )
-        dirs.append(side_dir)
-    return dirs[0], dirs[1]
+    even = F.col("event_id") % 2 == 0
+    left, right = os.path.join(out_dir, "left"), os.path.join(out_dir, "right")
+    _write_row_chunks(e.filter(even), left, n_chunks)
+    _write_row_chunks(e.filter(~even), right, n_chunks)
+    return left, right
 
 
 def replay_events_split_buckets(
@@ -106,41 +124,27 @@ def replay_events_split_buckets(
     time-ordered arrival (mtime-stamped below, like
     replay_events_time_buckets), not exact chunk sizes. Returns
     (left_dir, right_dir)."""
-    e = load_table(spark, sf_dir, "events").withColumn(
-        "__sec", F.unix_timestamp("ts")
-    )
-    cuts = e.stat.approxQuantile(
-        "__sec", [i / n_chunks for i in range(1, n_chunks)], 0.001
-    )
-    bucket = F.lit(0)
-    for c in cuts:
-        bucket = bucket + (F.col("__sec") > F.lit(c)).cast("int")
     (
-        e.withColumn("chunk", bucket)
+        _with_time_bucket(spark, sf_dir, n_chunks)
         .withColumn(
             "side",
             F.when(F.col("event_id") % 2 == 0, F.lit("left")).otherwise(F.lit("right")),
         )
-        .drop("__sec")
         .repartition("side", "chunk")
         .write.mode("overwrite")
         .partitionBy("side", "chunk")
         .parquet(out_dir)
     )
     t0 = time.time()
-    for side in ("left", "right"):
+    left, right = os.path.join(out_dir, "side=left"), os.path.join(out_dir, "side=right")
+    for side_dir in (left, right):
         # a side with zero rows (e.g. an empty events table) writes no
         # partition directory at all; the streaming reader supplies the
         # schema explicitly, so an EXISTING empty dir is a valid empty
         # source while a missing path is an analysis error
-        os.makedirs(os.path.join(out_dir, f"side={side}"), exist_ok=True)
-        for i in range(n_chunks):
-            chunk_dir = os.path.join(out_dir, f"side={side}", f"chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue  # an empty time bucket writes no directory
-            for name in os.listdir(chunk_dir):
-                os.utime(os.path.join(chunk_dir, name), (t0 + i, t0 + i))
-    return os.path.join(out_dir, "side=left"), os.path.join(out_dir, "side=right")
+        os.makedirs(side_dir, exist_ok=True)
+        _stamp_chunk_mtimes(side_dir, n_chunks, t0)
+    return left, right
 
 
 def replay_events_time_buckets(
@@ -164,30 +168,12 @@ def replay_events_time_buckets(
     nondeterministic: harmless for order-insensitive consumers (BENCH-6's
     tumbling agg), but a violation of the per-user in-order arrival
     contract that stateful consumers (subseq_match_stateful) enforce."""
-    e = load_table(spark, sf_dir, "events").withColumn(
-        "__sec", F.unix_timestamp("ts")
-    )
-    cuts = e.stat.approxQuantile(
-        "__sec", [i / n_chunks for i in range(1, n_chunks)], 0.001
-    )
-    bucket = F.lit(0)
-    for c in cuts:
-        bucket = bucket + (F.col("__sec") > F.lit(c)).cast("int")
     (
-        e.withColumn("chunk", bucket)
-        .drop("__sec")
+        _with_time_bucket(spark, sf_dir, n_chunks)
         .repartition("chunk")
         .write.mode("overwrite")
         .partitionBy("chunk")
         .parquet(out_dir)
     )
-    # stamp replay order into the mtimes the file source sorts by
-    t0 = time.time()
-    for i in range(n_chunks):
-        chunk_dir = os.path.join(out_dir, f"chunk={i}")
-        if not os.path.isdir(chunk_dir):
-            continue  # an empty time bucket writes no directory
-        for name in os.listdir(chunk_dir):
-            p = os.path.join(chunk_dir, name)
-            os.utime(p, (t0 + i, t0 + i))
+    _stamp_chunk_mtimes(out_dir, n_chunks, time.time())
     return out_dir

@@ -875,14 +875,14 @@ def test_hard_negatives_forced_ivf_path(spark, sf_oracle):
 
 
 def test_hardneg_probe_refires_on_input_rewrite(spark, tmp_path):
-    """VERDICT r17 #4: _HARDNEG_PROBE_CACHE keys on an input-files
+    """VERDICT r17 #4: _HARDNEG_SHAPE_CACHE keys on an input-files
     fingerprint beyond (app, semanticHash, vec_col), so a mid-session
     rewrite of the SAME path — which produces an IDENTICAL plan hash but
     new part-file names — re-fires the probe instead of returning the
     stale (n, dim) that steered path selection. The old documented
     immutability caveat is gone; this pins its replacement."""
     from hadoop_copier_spark.operators.similarity import (
-        _HARDNEG_PROBE_CACHE,
+        _HARDNEG_SHAPE_CACHE,
         hard_negatives_topk,
     )
 
@@ -897,17 +897,17 @@ def test_hardneg_probe_refires_on_input_rewrite(spark, tmp_path):
     path = str(tmp_path / "q.parquet")
     mk(3).write.mode("overwrite").parquet(path)
     cands = mk(8)
-    _HARDNEG_PROBE_CACHE.clear()
+    _HARDNEG_SHAPE_CACHE.clear()
 
     q1 = spark.read.parquet(path)
     hard_negatives_topk(cands, q1, k=2).collect()
-    keys1 = set(_HARDNEG_PROBE_CACHE)
+    keys1 = set(_HARDNEG_SHAPE_CACHE)
     assert len(keys1) == 1
-    assert _HARDNEG_PROBE_CACHE[next(iter(keys1))][0] == 3
+    assert _HARDNEG_SHAPE_CACHE[next(iter(keys1))][0] == 3
 
     # same plan, same files: HIT — no new key
     hard_negatives_topk(cands, spark.read.parquet(path), k=2).collect()
-    assert set(_HARDNEG_PROBE_CACHE) == keys1
+    assert set(_HARDNEG_SHAPE_CACHE) == keys1
 
     # rewrite the same path with a different row count: the plan (and
     # its semanticHash) is indistinguishable, only the files changed
@@ -915,9 +915,9 @@ def test_hardneg_probe_refires_on_input_rewrite(spark, tmp_path):
     q2 = spark.read.parquet(path)
     assert q2.semanticHash() == q1.semanticHash()
     hard_negatives_topk(cands, q2, k=2).collect()
-    new = set(_HARDNEG_PROBE_CACHE) - keys1
+    new = set(_HARDNEG_SHAPE_CACHE) - keys1
     assert len(new) == 1, "probe did not re-fire on same-path rewrite"
-    assert _HARDNEG_PROBE_CACHE[new.pop()][0] == 5
+    assert _HARDNEG_SHAPE_CACHE[new.pop()][0] == 5
 
 
 def test_connected_components_closes_255_chain_in_12_rounds(spark):

@@ -5,23 +5,22 @@ measurement silently includes or skips memoized work."""
 
 from hadoop_copier_spark.memo import clear_memoized_caches, consumed_caches
 from hadoop_copier_spark.operators import similarity
-from hadoop_copier_spark.queries import REGISTRY, graph_ops, tpch_analogs
+from hadoop_copier_spark.queries import REGISTRY, graph_ops
 
 
 def test_registry_names_every_known_cache():
     counts = clear_memoized_caches()
-    assert set(counts) == {"graph_edges", "tpch_probes", "hardneg_probe", "table_schemas"}
+    assert set(counts) == {"graph_edges", "hardneg_probe", "table_schemas"}
 
 
 def test_clear_only_touches_named_cache():
     graph_ops._EDGE_CACHE["k"] = "v"
-    tpch_analogs._PROBE_CACHE["k"] = 1
-    similarity._HARDNEG_PROBE_CACHE["k"] = (1, 1)
+    similarity._HARDNEG_SHAPE_CACHE["k"] = (1, 1)
     try:
         out = clear_memoized_caches(only=("graph_edges",))
         assert out == {"graph_edges": 1}
         assert not graph_ops._EDGE_CACHE
-        assert tpch_analogs._PROBE_CACHE and similarity._HARDNEG_PROBE_CACHE
+        assert similarity._HARDNEG_SHAPE_CACHE
     finally:
         clear_memoized_caches()
 
@@ -38,7 +37,8 @@ def test_consumed_caches_covers_every_cache_using_query():
     assert "xh_bfs_hops" in by_cache["graph_edges"]
     assert "xh_hard_negatives" in by_cache["hardneg_probe"]
     assert len(by_cache["hardneg_probe"]) == 1
-    assert by_cache["tpch_probes"]  # the tpch analog family
+    # the tpch analogs memoize nothing: their part joins are unhinted
+    assert not any(n.startswith("xh_tpch_") for ns in by_cache.values() for n in ns)
     # module-rule sanity: nothing outside the owning modules claims a cache
     for name in by_cache["graph_edges"]:
         assert REGISTRY[name].fn.__module__.endswith("queries.graph_ops")
@@ -79,29 +79,29 @@ def test_clear_then_rebuild_is_lazy(spark, sf_smoke):
 
 
 def test_snapshot_diff_attributes_each_key_to_its_query():
-    """tpch_probes holds one entry per (session, sf_dir, site), each built
-    by the FIRST query using that site. Diffing snapshots taken around
-    each query attributes every key to the query that built it, and
-    keys other caches gain in between land under their own cache name."""
+    """hardneg_probe holds one entry per probed query set, each built by
+    the FIRST query that probes it. Diffing snapshots taken around each
+    query attributes every key to the query that built it, and keys
+    other caches gain in between land under their own cache name."""
     from hadoop_copier_spark.memo import snapshot_cache_keys
 
     clear_memoized_caches()
     try:
         pre = snapshot_cache_keys()
-        tpch_analogs._PROBE_CACHE[("app", "sf", "site_a")] = 1
-        tpch_analogs._PROBE_CACHE[("app", "sf", "site_b")] = 2
+        similarity._HARDNEG_SHAPE_CACHE[("app", "sf", "site_a")] = 1
+        similarity._HARDNEG_SHAPE_CACHE[("app", "sf", "site_b")] = 2
         mid = snapshot_cache_keys()
         built_q1 = {c: mid[c] - pre[c] for c in mid if mid[c] - pre[c]}
         assert built_q1 == {
-            "tpch_probes": {("app", "sf", "site_a"), ("app", "sf", "site_b")}
+            "hardneg_probe": {("app", "sf", "site_a"), ("app", "sf", "site_b")}
         }
         # a second query builds a third site + an unrelated cache entry
-        tpch_analogs._PROBE_CACHE[("app", "sf", "site_c")] = 3
+        similarity._HARDNEG_SHAPE_CACHE[("app", "sf", "site_c")] = 3
         graph_ops._EDGE_CACHE[("app", "sf")] = "edges"
         post = snapshot_cache_keys()
         built_q2 = {c: post[c] - mid[c] for c in post if post[c] - mid[c]}
         assert built_q2 == {
-            "tpch_probes": {("app", "sf", "site_c")},
+            "hardneg_probe": {("app", "sf", "site_c")},
             "graph_edges": {("app", "sf")},
         }
     finally:

@@ -131,6 +131,22 @@ def test_ntile_no_single_partition_exchange(spark, sf_oracle):
         assert not _single_partition_funnels(simple), (name, simple[:800])
 
 
+def test_ntile_warm_build_runs_four_jobs(spark, sf_smoke):
+    """A warm q35 build runs the range stamp's sampling and shuffle jobs
+    and then the per-partition count collect (a shuffle job and a result
+    job). The stamp's lazy checkpoint is materialized by that collect; the
+    eager checkpoint it replaced ran a fifth job of its own."""
+    sc = spark.sparkContext
+    REGISTRY["q35"].fn(spark, sf_smoke)  # cold: table open and codegen
+    group = "warm-q35-build"
+    sc.setJobGroup(group, group)
+    try:
+        REGISTRY["q35"].fn(spark, sf_smoke)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+
 def test_correlated_scalar_subquery_decorrelated(spark, sf_oracle):
     """Catalyst must rewrite the correlated scalar subquery into an
     aggregate + join (one pass), never a per-row ScalarSubquery."""
@@ -705,16 +721,6 @@ _ADJUDICATED_BROADCASTS = {
     ("queries/tpch_analogs.py", "nc"),      # region-sliced nation keys (q8)
     ("queries/tpch_analogs.py", "ns"),      # 25-row nation decode (q8)
     ("queries/tpch_analogs.py", "nr"),      # region-sliced nation decode (q2)
-    # probed part slices (VERDICT r13 #3, byte-aware + memoized since
-    # r15): part is SF-PROPORTIONAL (200k x SF — grows with the catalog,
-    # linear in SF, never with the fact tables), so every part-derived
-    # build side in tpch_analogs routes through _probed_broadcast: the
-    # ONLY F.broadcast call on part frames is the one inside the helper,
-    # applied iff probed_rows x est_row_bytes clears
-    # _PART_BROADCAST_MAX_BYTES; past the bound the join is unhinted and
-    # AQE decides. Covers q2/q8/q9/q11/q14/q17/q19/q20 (q14 additionally
-    # projects to 2 columns before probing).
-    ("queries/tpch_analogs.py", "df"),
     ("queries/tpch_analogs.py", "r"),
     ("queries/tpch_analogs.py", "s"),
     ("queries/tpch_analogs.py", "t"),       # 1-row nation-total scalar (q11)
@@ -770,70 +776,16 @@ def test_forced_broadcast_sites_are_adjudicated_bounded():
     assert not stale, f"remove stale whitelist entries: {sorted(stale)}"
 
 
-def test_part_broadcast_is_probed(spark, sf_oracle, monkeypatch):
-    """VERDICT r13 #3 / r14 #4: part is SF-proportional, so its broadcast
-    hint must be gated by the (byte-aware) probe. Below the bound the
-    fixture part slice hints (BroadcastHashJoin, no fact shuffle); with
-    the byte bound forced to 0 the hint must be GONE from the logical
-    plan — the join is AQE's call, not a pin."""
-    from hadoop_copier_spark.queries import tpch_analogs as ta
-
-    text = _explain(spark, sf_oracle, "xh_tpch_q14")
-    assert "BroadcastHashJoin" in text  # fixture part clears the probe
-
-    monkeypatch.setattr(ta, "_PART_BROADCAST_MAX_BYTES", 0)
+def test_part_join_is_unhinted_and_still_broadcast(spark, sf_oracle):
+    """part is SF-proportional (200k rows x SF), so no part join carries a
+    broadcast hint: Spark's size-based planner and AQE pick the strategy
+    from the slice's size, as for every other unhinted join. At the
+    fixture scale that still plans q14's 2-column part slice as a
+    BroadcastHashJoin."""
     df = REGISTRY["xh_tpch_q14"].fn(spark, sf_oracle)
-    logical = df._jdf.queryExecution().analyzed().toString()
-    assert "UnresolvedHint" not in logical and "ResolvedHint" not in logical
-    # and the gated plan still computes the same result
-    ungated = [tuple(r) for r in df.collect()]
-    monkeypatch.undo()
-    gated = [tuple(r) for r in REGISTRY["xh_tpch_q14"].fn(spark, sf_oracle).collect()]
-    assert ungated == gated
-
-
-def test_probe_count_is_memoized_per_site(spark, sf_oracle):
-    """VERDICT r14 #4 / ADVICE: repeated invocations of the probed
-    queries in one session must pay exactly ONE probe count() job per
-    (applicationId, sf_dir, site) — at 100 TB an unmemoized probe is a
-    full dimension-slice scan per query submission."""
-    from hadoop_copier_spark.queries import tpch_analogs as ta
-
-    app = spark.sparkContext.applicationId
-    for k in [k for k in ta._PROBE_CACHE if k[0] == app and k[1] == sf_oracle]:
-        del ta._PROBE_CACHE[k]
-    before = ta._PROBE_JOBS
-    for _ in range(3):
-        for name in ("xh_tpch_q14", "xh_tpch_q17", "xh_tpch_q19"):
-            REGISTRY[name].fn(spark, sf_oracle)  # plan build runs the probe
-    # 3 repeated builds x 3 queries -> exactly 3 probe jobs (one per site)
-    assert ta._PROBE_JOBS - before == 3
-    assert {k[2] for k in ta._PROBE_CACHE if k[0] == app and k[1] == sf_oracle} >= {
-        "q14", "q17", "q19",
-    }
-
-
-def test_probe_bound_is_byte_aware():
-    """ADVICE r14: a wide slice earns a proportionally smaller row
-    budget — the 3-column q2 slice's bound must be below the 1-column
-    q17/q20 slice's bound, and the old flat 2M-row bound must not be
-    reachable for any multi-column slice."""
-    from pyspark.sql.types import (
-        IntegerType, LongType, StringType, StructField, StructType,
-    )
-
-    from hadoop_copier_spark.queries import tpch_analogs as ta
-
-    one = StructType([StructField("p_partkey", LongType())])
-    three = StructType([
-        StructField("p_partkey", LongType()),
-        StructField("p_type", StringType()),
-        StructField("p_size", IntegerType()),
-    ])
-    assert ta._max_broadcast_rows(three) < ta._max_broadcast_rows(one)
-    # 8 + 32 + 4 = 44 B/row -> ~1.5M rows for 64 MiB; the flat 2M bound
-    # (~100 MB for this slice, the ADVICE finding) is no longer possible
-    assert ta._max_broadcast_rows(three) * 44 <= ta._PART_BROADCAST_MAX_BYTES
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert "UnresolvedHint" not in analyzed and "ResolvedHint" not in analyzed
+    assert "BroadcastHashJoin" in explain_str(df)
 
 
 def test_probe_caches_evict_dead_sessions(spark, sf_oracle):
@@ -841,34 +793,27 @@ def test_probe_caches_evict_dead_sessions(spark, sf_oracle):
     insert (a long-lived process that restarts Spark sessions must not
     accumulate stale probe counts / checkpoint handles). Planted fake
     dead-app keys must be gone after the next cache-miss insert in
-    each of the three memoized caches."""
+    each of the two per-session memoized caches."""
     from hadoop_copier_spark.operators import similarity as sim
     from hadoop_copier_spark.queries import graph_ops as go
-    from hadoop_copier_spark.queries import tpch_analogs as ta
 
     app = spark.sparkContext.applicationId
-    ta._PROBE_CACHE[("dead-app-1", "x", "q99")] = 42
-    for k in [k for k in ta._PROBE_CACHE if k[0] == app and k[1] == sf_oracle]:
-        del ta._PROBE_CACHE[k]
-    REGISTRY["xh_tpch_q14"].fn(spark, sf_oracle)  # miss -> insert -> evict
-    assert ("dead-app-1", "x", "q99") not in ta._PROBE_CACHE
-
     go._EDGE_CACHE[("dead-app-2", "x")] = "stale-frame"
     for k in [k for k in go._EDGE_CACHE if k[0] == app and k[1] == sf_oracle]:
         del go._EDGE_CACHE[k]
     go._weighted_edges(spark, sf_oracle)
     assert ("dead-app-2", "x") not in go._EDGE_CACHE
 
-    sim._HARDNEG_PROBE_CACHE[("dead-app-3", 0, "embedding")] = (1, 1)
+    sim._HARDNEG_SHAPE_CACHE[("dead-app-3", 0, "embedding")] = (1, 1)
     from pyspark.sql import functions as F
 
     e = spark.read.parquet(f"{sf_oracle}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 3)
-    for k in [k for k in sim._HARDNEG_PROBE_CACHE if k[0] == app]:
-        del sim._HARDNEG_PROBE_CACHE[k]
+    for k in [k for k in sim._HARDNEG_SHAPE_CACHE if k[0] == app]:
+        del sim._HARDNEG_SHAPE_CACHE[k]
     sim.hard_negatives_topk(e, q, k=2).count()
-    assert ("dead-app-3", 0, "embedding") not in sim._HARDNEG_PROBE_CACHE
+    assert ("dead-app-3", 0, "embedding") not in sim._HARDNEG_SHAPE_CACHE
     # and the live probe memoized: a second build adds no new key
-    n_keys = len(sim._HARDNEG_PROBE_CACHE)
+    n_keys = len(sim._HARDNEG_SHAPE_CACHE)
     sim.hard_negatives_topk(e, q, k=2).count()
-    assert len(sim._HARDNEG_PROBE_CACHE) == n_keys
+    assert len(sim._HARDNEG_SHAPE_CACHE) == n_keys
